@@ -26,6 +26,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def round_like_duckdb(col: Column, d: int) -> Column:
+    """``round(col, d)`` for a DOUBLE ``col`` with DuckDB's arithmetic:
+    scale by 10^d, round half away from zero, scale back, each step in
+    doubles. Spark's own ``round`` rounds the shortest decimal form of the
+    double half-up, so a money sum of 1.005 (stored as 1.00499999...)
+    gives 1.01 in Spark and 1.0 in DuckDB; here the multiply reproduces
+    DuckDB's 100.49999999999999 and both engines give 1.0."""
+    scale = 10.0**d
+    return F.round(col * scale, 0) / scale
+
+
 def map_transform(df: DataFrame, *cols: Column) -> DataFrame:
     """1→1 projection (reference Stream.scala:14-23). Alias every computed
     column at the call site so downstream schemas are stable."""

@@ -73,7 +73,8 @@ def minhash_signatures(sh: DataFrame, n_hashes: int = N_MINHASH) -> DataFrame:
     signature width, and integer mins instead of string mins. (Per-doc set
     sizes for the exact-Jaccard verify come out of the candidate-bounded
     set aggregation in ``verify_jaccard``, not from here.)"""
-    assert n_hashes <= 8, "derive more salted md5s for wider signatures"
+    if n_hashes > 8:
+        raise ValueError(f"n_hashes={n_hashes}: derive more salted md5s for signatures wider than 8")
     h1 = F.md5(F.encode(F.col("shingle"), "UTF-8"))
     h2 = F.md5(F.encode(F.concat(F.lit("x"), F.col("shingle")), "UTF-8"))
     chunks = [F.conv(F.substring(h1, 1 + 8 * i, 8), 16, 10).cast("long") for i in range(4)] + [

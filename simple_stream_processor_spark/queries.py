@@ -514,10 +514,10 @@ def q_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return relational.group_agg(
         li,
         ["l_returnflag", "l_linestatus"],
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.round(F.sum(price_c) / F.lit(100.0), 2).alias("sum_base_price"),
-        F.round(F.sum(_revenue_units()) / F.lit(10000.0), 2).alias("sum_disc_price"),
-        F.round(F.avg("l_quantity"), 2).alias("avg_qty"),
+        core.round_like_duckdb(F.sum("l_quantity"), 2).alias("sum_qty"),
+        core.round_like_duckdb(F.sum(price_c) / F.lit(100.0), 2).alias("sum_base_price"),
+        core.round_like_duckdb(F.sum(_revenue_units()) / F.lit(10000.0), 2).alias("sum_disc_price"),
+        core.round_like_duckdb(F.avg("l_quantity"), 2).alias("avg_qty"),
         F.count(F.lit(1)).alias("count_order"),
     )
 

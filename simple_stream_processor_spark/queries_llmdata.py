@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from simple_stream_processor_spark.operators import dedup, multimodal, similarity, text
 from simple_stream_processor_spark.registry import query, scoped_persist
 from simple_stream_processor_spark import tables
-from simple_stream_processor_spark.tables import load_table
+from simple_stream_processor_spark.tables import load_table, session_memo
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -238,7 +238,6 @@ _MINHASH_SIGS = ",\n             ".join(
 # never taxes later, unrelated queries with heap/GC pressure.  (The prior
 # unscoped persist measurably inflated the driver bench tail — the r9 sf1
 # study's 16 spurious super-linear flags.)
-_PAIRS_MEMO: dict = {}
 
 
 def _scoped_memo_cache(df: DataFrame) -> DataFrame:
@@ -258,12 +257,9 @@ def _scoped_memo_cache(df: DataFrame) -> DataFrame:
 # pair table before joining it, so an unpersisted plan recomputes the
 # shingle→signature→band→self-join chain ~4x per query (measured 9.9 s for
 # q_minhash_precision at sf0.1; ~2.5 s persisted).
-_TRIGRAM_CAND_MEMO: dict = {}
-
-
 def _trigram_candidates(spark: SparkSession, sf_dir: str):
-    key = (id(spark), sf_dir)
-    if key not in _TRIGRAM_CAND_MEMO:
+    memo = session_memo(spark, "trigram_candidates")
+    if sf_dir not in memo:
         sh = dedup.shingle_table(_t(spark, sf_dir, "documents"), k=3)
         # r11 (guide §5): persist the BAND table too — candidate_pairs
         # self-joins it, and with only sh cached each join side re-ran the
@@ -271,39 +267,36 @@ def _trigram_candidates(spark: SparkSession, sf_dir: str):
         # ~1.2 s at sf0.1) once per side on every cold build.
         bands = dedup.lsh_band_table(dedup.minhash_signatures(sh))
         pairs = dedup.candidate_pairs(bands)
-        _TRIGRAM_CAND_MEMO[key] = (sh, bands, pairs)
-    sh, bands, pairs = _TRIGRAM_CAND_MEMO[key]
+        memo[sf_dir] = (sh, bands, pairs)
+    sh, bands, pairs = memo[sf_dir]
     _scoped_memo_cache(bands)
     return _scoped_memo_cache(sh), _scoped_memo_cache(pairs)
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key not in _PAIRS_MEMO:
+    memo = session_memo(spark, "minhash_pairs")
+    if sf_dir not in memo:
         sh, pairs = _trigram_candidates(spark, sf_dir)
-        _PAIRS_MEMO[key] = dedup.verify_jaccard(pairs, sh, threshold=0.5)
+        memo[sf_dir] = dedup.verify_jaccard(pairs, sh, threshold=0.5)
     else:
         _trigram_candidates(spark, sf_dir)  # re-register the shared head's caches
-    return _scoped_memo_cache(_PAIRS_MEMO[key])
+    return _scoped_memo_cache(memo[sf_dir])
 
 
 # Same shared-intermediate pattern at bigram granularity: the shingle table
 # and LSH candidate pairs feed BOTH verification semantics (Jaccard +
 # containment) — one candidate generation, two consumers.
-_NGRAM_CAND_MEMO: dict = {}
-
-
 def _ngram_candidates(spark: SparkSession, sf_dir: str):
-    key = (id(spark), sf_dir)
-    if key not in _NGRAM_CAND_MEMO:
+    memo = session_memo(spark, "ngram_candidates")
+    if sf_dir not in memo:
         sh = dedup.shingle_table(_t(spark, sf_dir, "documents"), k=2)
         # r11: persist the band table (see _trigram_candidates) — the
         # candidate self-join otherwise re-runs the signature aggregate
         # once per join side on every cold build.
         bands = dedup.lsh_band_table(dedup.minhash_signatures(sh))
         pairs = dedup.candidate_pairs(bands)
-        _NGRAM_CAND_MEMO[key] = (sh, bands, pairs)
-    sh, bands, pairs = _NGRAM_CAND_MEMO[key]
+        memo[sf_dir] = (sh, bands, pairs)
+    sh, bands, pairs = memo[sf_dir]
     _scoped_memo_cache(bands)
     return _scoped_memo_cache(sh), _scoped_memo_cache(pairs)
 

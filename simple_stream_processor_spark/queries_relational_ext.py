@@ -4693,7 +4693,7 @@ def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PRICE-DOMAIN bound, not a law of nature — cells = value_range / 65536,
     # so it holds while cents < 65536·4096 (≈ $2.68 M, far above the TPC-H
     # price domain). A wider value domain grows the collect linearly, so the
-    # assert below makes the assumption LOUD instead of silently collecting
+    # check below makes the assumption LOUD instead of silently collecting
     # an unbounded histogram; re-derive the radix width from min/max (the
     # q_bisect_median bracket probe) before lifting it. Also note the
     # eager-construction semantics: this collect runs Spark jobs at
@@ -4707,10 +4707,11 @@ def q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
     )
-    assert len(coarse) <= 4096, (
-        f"equidepth coarse histogram outgrew its radix width ({len(coarse)} cells): "
-        "value domain wider than cents < 65536*4096 — widen the radix base"
-    )
+    if len(coarse) > 4096:
+        raise ValueError(
+            f"equidepth coarse histogram outgrew its radix width ({len(coarse)} cells): "
+            "value domain wider than cents < 65536*4096 — widen the radix base"
+        )
     n = sum(c for _, c in coarse)
     grid_rows = []
     for i in range(1, 16):

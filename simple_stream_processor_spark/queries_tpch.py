@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_stream_processor_spark.operators.core import round_like_duckdb
 from simple_stream_processor_spark.queries import _revenue_units
 from simple_stream_processor_spark.registry import query
 from simple_stream_processor_spark.tables import load_table
@@ -63,10 +64,10 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     charge_u = (pc * (F.lit(100) - dp) * (F.lit(100) + tp)).cast("decimal(38,0)")
     n = F.count(F.lit(1))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum(qc) / F.lit(100.0), 2).alias("sum_qty"),
-        F.round(F.sum(pc) / F.lit(100.0), 2).alias("sum_base_price"),
-        F.round(F.sum(disc_u) / F.lit(10000.0), 2).alias("sum_disc_price"),
-        F.round(F.sum(charge_u) / F.lit(1000000.0), 2).alias("sum_charge"),
+        round_like_duckdb(F.sum(qc) / F.lit(100.0), 2).alias("sum_qty"),
+        round_like_duckdb(F.sum(pc) / F.lit(100.0), 2).alias("sum_base_price"),
+        round_like_duckdb(F.sum(disc_u) / F.lit(10000.0), 2).alias("sum_disc_price"),
+        round_like_duckdb(F.sum(charge_u) / F.lit(1000000.0), 2).alias("sum_charge"),
         # averages divide by n, so the true rational can sit EXACTLY on a
         # decimal half-boundary where Spark's round (exact binary
         # expansion) and DuckDB's (re-rounding multiply) disagree — found
@@ -130,7 +131,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.groupBy("l_orderkey", "o_orderdate")
         # exact integer units: a cent flip near the top-10 frontier would
         # otherwise reorder the LIMIT under a different accumulation order
-        .agg(F.round(F.sum(_revenue_units()) / F.lit(10000.0), 2).alias("revenue"))
+        .agg(round_like_duckdb(F.sum(_revenue_units()) / F.lit(10000.0), 2).alias("revenue"))
         .select(
             "l_orderkey",
             "revenue",
@@ -163,7 +164,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        F.round(
+        round_like_duckdb(
             F.sum(
                 (
                     F.round(F.col("l_extendedprice") * 100, 0).cast("long")

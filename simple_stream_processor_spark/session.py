@@ -11,6 +11,9 @@ Cluster-scale rationale (100 TB notes):
   JVM<->Python in columnar Arrow batches, not pickled rows.
 - Session timezone pinned to UTC so event-time semantics are stable across
   driver/executor locales (and match the DuckDB oracle).
+- Streaming checkpoints on a local default filesystem go through Spark's
+  FileSystem-based checkpoint manager (see ``_LOCAL_CHECKPOINT_MANAGER``);
+  HDFS and object stores keep Spark's default.
 """
 
 from __future__ import annotations
@@ -20,6 +23,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+# Spark's default FileContext manager renames with FileContext.rename, which
+# calls getFileLinkStatus; without Hadoop's native libraries that forks a
+# `readlink` process per rename (every offset/commit/source log entry and
+# every state-store delta file). RawLocalFileSystem.rename is one
+# File.renameTo, atomic on POSIX, so on `file:` the FileSystem manager keeps
+# the atomic-publish contract without the forks.
+_LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(app_name: str = "simple_stream_processor_spark", cpus: str | None = None) -> SparkSession:
@@ -56,4 +70,7 @@ def get_spark(app_name: str = "simple_stream_processor_spark", cpus: str | None 
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    if default_fs.startswith("file:") and spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None:
+        spark.conf.set(_CHECKPOINT_MANAGER_KEY, _LOCAL_CHECKPOINT_MANAGER)
     return spark

@@ -12,6 +12,10 @@ again after ingest.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -33,8 +37,6 @@ def write_bucketed(
     LOCATION_ALREADY_EXISTS. For overwrite mode we drop the catalog entry
     AND remove any orphaned directory before writing."""
     if mode == "overwrite":
-        import os
-        import shutil
         import sys
         from urllib.parse import urlparse
 
@@ -187,6 +189,26 @@ def write_zordered(
 # thousand files), never data.
 
 
+def _manifest_versions(mdir: str) -> list[int]:
+    return sorted(int(f[1:-5]) for f in os.listdir(mdir) if f.startswith("v") and f.endswith(".json"))
+
+
+def _read_manifest(mdir: str, version: int) -> dict:
+    with open(os.path.join(mdir, f"v{version}.json")) as fh:
+        return json.load(fh)
+
+
+def _publish_manifest(mdir: str, manifest: dict) -> int:
+    """Write ``manifest`` to a temporary name and rename it into place: the
+    rename is the commit point, so a reader sees the whole version or none."""
+    new = manifest["version"]
+    tmp = os.path.join(mdir, f".v{new}.json.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh)
+    os.replace(tmp, os.path.join(mdir, f"v{new}.json"))
+    return new
+
+
 def snapshot_write(
     spark: SparkSession,
     df: DataFrame,
@@ -203,16 +225,11 @@ def snapshot_write(
     on disk for older-version reads — retention/GC is a vacuum policy,
     not a correctness concern).
     """
-    import json
-    import os
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"snapshot_write mode must be append|overwrite, got {mode!r}")
     mdir = os.path.join(path, "_manifests")
     os.makedirs(mdir, exist_ok=True)
-    versions = sorted(
-        int(f[1:-5]) for f in os.listdir(mdir) if f.startswith("v") and f.endswith(".json")
-    )
+    versions = _manifest_versions(mdir)
     prev = versions[-1] if versions else 0
     new = prev + 1
 
@@ -223,16 +240,8 @@ def snapshot_write(
         for f in os.listdir(commit_dir)
         if f.endswith(".parquet")
     )
-    carried = []
-    if mode == "append" and prev:
-        with open(os.path.join(mdir, f"v{prev}.json")) as fh:
-            carried = json.load(fh)["files"]
-    manifest = {"version": new, "files": carried + files}
-    tmp = os.path.join(mdir, f".v{new}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{new}.json"))  # atomic publish
-    return new
+    carried = _read_manifest(mdir, prev)["files"] if mode == "append" and prev else []
+    return _publish_manifest(mdir, {"version": new, "files": carried + files})
 
 
 def snapshot_read(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
@@ -242,33 +251,19 @@ def snapshot_read(spark: SparkSession, path: str, version: int | None = None) ->
     version (or dropped by a later overwrite) are invisible, whenever
     they were written.
     """
-    import json
-    import os
-
-    mdir = os.path.join(path, "_manifests")
-    versions = sorted(
-        int(f[1:-5]) for f in os.listdir(mdir) if f.startswith("v") and f.endswith(".json")
-    )
+    versions = snapshot_versions(path)
     if not versions:
         raise FileNotFoundError(f"no snapshot versions under {path}")
     v = version if version is not None else versions[-1]
     if v not in versions:
         raise FileNotFoundError(f"snapshot version {v} not in {versions} under {path}")
-    with open(os.path.join(mdir, f"v{v}.json")) as fh:
-        manifest = json.load(fh)
-    return spark.read.parquet(*manifest["files"])
+    return spark.read.parquet(*_read_manifest(os.path.join(path, "_manifests"), v)["files"])
 
 
 def snapshot_versions(path: str) -> list[int]:
     """All published versions of snapshot table ``path``, ascending."""
-    import os
-
     mdir = os.path.join(path, "_manifests")
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(f[1:-5]) for f in os.listdir(mdir) if f.startswith("v") and f.endswith(".json")
-    )
+    return _manifest_versions(mdir) if os.path.isdir(mdir) else []
 
 
 def snapshot_vacuum(path: str, keep_last: int = 1) -> dict:
@@ -285,20 +280,14 @@ def snapshot_vacuum(path: str, keep_last: int = 1) -> dict:
     unlink is independent — trivially parallelizable; correctness never
     depends on vacuum running at all.
     """
-    import json
-    import os
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     mdir = os.path.join(path, "_manifests")
-    versions = sorted(
-        int(f[1:-5]) for f in os.listdir(mdir) if f.startswith("v") and f.endswith(".json")
-    )
+    versions = _manifest_versions(mdir)
     kept, retired = versions[-keep_last:], versions[:-keep_last]
     live: set[str] = set()
     for v in kept:
-        with open(os.path.join(mdir, f"v{v}.json")) as fh:
-            live.update(json.load(fh)["files"])
+        live.update(_read_manifest(mdir, v)["files"])
     removed_files = 0
     data_root = os.path.join(path, "data")
     for dirpath, _dirnames, filenames in os.walk(data_root):
@@ -312,50 +301,76 @@ def snapshot_vacuum(path: str, keep_last: int = 1) -> dict:
     return {"kept_versions": kept, "retired_versions": retired, "removed_files": removed_files}
 
 
+def _fits_on_driver(df: DataFrame) -> bool:
+    """True when the optimiser's size estimate for ``df`` is within the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark
+    itself is willing to collect to the driver for a broadcast. A threshold
+    of 0 or less (broadcasts off) keeps everything on the executors."""
+    limit = df.sparkSession._jconf.autoBroadcastJoinThreshold()
+    if limit <= 0:
+        return False
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())) <= limit
+
+
+def _write_arrow(df: DataFrame, commit_dir: str) -> str:
+    """Run ``df`` once into Arrow on the driver and write it as one parquet
+    file under ``commit_dir`` (cleared first: a crashed attempt may have
+    left files there). No Spark write job and no Hadoop output committer:
+    on local disk those fork a ``chmod`` per created file."""
+    import pyarrow.parquet as pq
+
+    table = df.toArrow()
+    shutil.rmtree(commit_dir, ignore_errors=True)
+    os.makedirs(commit_dir)
+    final = os.path.join(commit_dir, "part-00000.parquet")
+    tmp = os.path.join(commit_dir, ".part-00000.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
+    return final
+
+
 def snapshot_write_batch(spark: SparkSession, df: DataFrame, path: str, batch_id: int) -> int:
     """Idempotent per-micro-batch commit for ``foreachBatch`` — the
     exactly-once sink contract: Structured Streaming replays a batch id
     after failure, and a replay of an already-committed id must be a
     NO-OP, not a duplicate append.
 
-    Idempotence key = the batch id recorded in each manifest: if any
-    manifest already carries it, return that version without writing.
+    Idempotence key = the batch id recorded in each manifest. Batch ids
+    only grow within a checkpoint, so a commit reads the latest manifest
+    alone: an id above its ``batch_id`` is new, and only an id at or below
+    it (a replay) scans the older manifests backwards for its version. A
+    table whose latest manifest has no ``batch_id`` (written by
+    ``snapshot_write``) is always scanned.
+
     Data lands under ``data/batch-{id}`` (replay-stable name), and the
     atomic manifest rename is the commit point — a crash after the data
     write but before the rename leaves an unreferenced directory that a
-    replay overwrites and vacuum sweeps, never a half-visible batch.
+    replay overwrites and vacuum sweeps, never a half-visible batch. A
+    batch the optimiser sizes within the broadcast threshold is written
+    from Arrow on the driver (``_write_arrow``); a larger one by a Spark
+    write job, the only path that works when a batch does not fit on the
+    driver.
     Usage: ``q.foreachBatch(lambda b, i: snapshot_write_batch(spark, b, path, i))``.
     """
-    import json
-    import os
-
     mdir = os.path.join(path, "_manifests")
     os.makedirs(mdir, exist_ok=True)
-    versions = sorted(
-        int(f[1:-5]) for f in os.listdir(mdir) if f.startswith("v") and f.endswith(".json")
-    )
-    for v in versions:
-        with open(os.path.join(mdir, f"v{v}.json")) as fh:
-            m = json.load(fh)
-        if m.get("batch_id") == batch_id:
-            return v  # replayed batch: already committed, no-op
+    versions = _manifest_versions(mdir)
     prev = versions[-1] if versions else 0
-    new = prev + 1
+    latest = _read_manifest(mdir, prev) if prev else {"batch_id": -1, "files": []}
+    if batch_id <= latest.get("batch_id", batch_id):
+        for v in reversed(versions):
+            if _read_manifest(mdir, v).get("batch_id") == batch_id:
+                return v  # replayed batch: already committed, no-op
 
     commit_dir = os.path.join(path, "data", f"batch-{batch_id}")
-    df.write.mode("overwrite").parquet(commit_dir)  # overwrite: crash-retry-safe
-    files = sorted(
-        os.path.join(commit_dir, f)
-        for f in os.listdir(commit_dir)
-        if f.endswith(".parquet")
-    )
-    carried = []
-    if prev:
-        with open(os.path.join(mdir, f"v{prev}.json")) as fh:
-            carried = json.load(fh)["files"]
-    manifest = {"version": new, "batch_id": batch_id, "files": carried + files}
-    tmp = os.path.join(mdir, f".v{new}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{new}.json"))
-    return new
+    if _fits_on_driver(df):
+        files = [_write_arrow(df, commit_dir)]
+    else:
+        df.write.mode("overwrite").parquet(commit_dir)  # overwrite: crash-retry-safe
+        files = sorted(
+            os.path.join(commit_dir, f)
+            for f in os.listdir(commit_dir)
+            if f.endswith(".parquet")
+        )
+    manifest = {"version": prev + 1, "batch_id": batch_id, "files": latest["files"] + files}
+    return _publish_manifest(mdir, manifest)

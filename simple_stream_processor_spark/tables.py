@@ -10,6 +10,7 @@ scale-critical property the reference's cons-list source has no analog for.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,11 +46,23 @@ TABLES = _BASE_TABLES + (("partsupp",) if _partsupp_fixture_present() else ())
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# (session id, sf_dir, table) → DataFrame. A DataFrame is just a logical
-# plan; reusing it reuses the resolved file index + footer schema (driver-side
-# listing/inference cost) while keeping every per-query optimization intact —
-# Catalyst re-prunes columns and re-pushes filters per consuming plan.
-_SCAN_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+_SESSION_MEMOS: weakref.WeakKeyDictionary[SparkSession, dict[str, dict]] = weakref.WeakKeyDictionary()
+
+
+def session_memo(spark: SparkSession, name: str) -> dict:
+    """The memo dict ``name`` of session ``spark``.
+
+    Memos are keyed on the session object (weakly), never on ``id(spark)``:
+    CPython reuses an id once its object is freed, so an id key can serve
+    one session's DataFrame to another. A memoised DataFrame refers back
+    to its session and so keeps the weak key alive; the memos of stopped
+    sessions are therefore dropped whenever a new session asks for one."""
+    memos = _SESSION_MEMOS.get(spark)
+    if memos is None:
+        for stopped in [s for s in _SESSION_MEMOS if s.sparkContext._jsc is None]:
+            del _SESSION_MEMOS[stopped]
+        memos = _SESSION_MEMOS[spark] = {}
+    return memos.setdefault(name, {})
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -67,14 +80,15 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     session timezone should use a separate SparkSession for this package."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    key = (id(spark), sf_dir, name)
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    df = _normalize_timestamps(spark, df)
-    _SCAN_CACHE[key] = df
-    return df
+    # (sf_dir, table) → DataFrame. A DataFrame is just a logical plan; reusing
+    # it reuses the resolved file index + footer schema (driver-side
+    # listing/inference cost) while keeping every per-query optimization
+    # intact — Catalyst re-prunes columns and re-pushes filters per plan.
+    scans = session_memo(spark, "scan")
+    key = (sf_dir, name)
+    if key not in scans:
+        scans[key] = _normalize_timestamps(spark, spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    return scans[key]
 
 
 def _normalize_timestamps(spark: SparkSession, df: DataFrame) -> DataFrame:

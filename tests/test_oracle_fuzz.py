@@ -19,6 +19,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import random
 import shutil
 
 import duckdb
@@ -562,3 +563,72 @@ def test_random_tpch_tables_match_duckdb_oracles(spark, tmp_path_factory, triple
     _write_table(tmpdir, "orders", orders)
     _write_table(tmpdir, "lineitem", lineitem)
     _check_parity(spark, tmpdir, list(picks[:10]))
+
+
+# Q1's shipdate cutoff, 1998-09-02, in days after _EPOCH_1995.
+_Q1_CUTOFF_DAYS = 1340
+
+
+def _duckdb_rounds_half_cent_down(s: int) -> bool:
+    """``round(s / 10000.0, 2)`` sits on a half-cent, and DuckDB's double
+    round — ``round(x * 100) / 100`` — sends it down while rounding the
+    decimal ``s / 10000`` half-up sends it up."""
+    return s % 100 == 50 and (s / 10000.0) * 100.0 < s / 100.0
+
+
+@st.composite
+def _half_cent_lineitem_frame(draw):
+    """lineitem whose every (l_returnflag, l_linestatus) group has a
+    discounted-cents sum ``sum(cents(price) * (100 - pct(discount)))``
+    ending in 50 at a half-cent DuckDB rounds down: the ``sum_disc_price``
+    tie of q_tpch_q1 and q_group_agg. Every row passes Q1's date filter."""
+    groups = draw(
+        st.lists(st.sampled_from([(f, s) for f in RETURNFLAG for s in LINESTATUS]), min_size=1, max_size=6, unique=True)
+    )
+    cents, pcts, keys = [], [], []
+    for key in groups:
+        k = draw(st.integers(0, 6 * _SCALE))
+        c = draw(st.lists(st.integers(90_000, 10_500_000), min_size=k, max_size=k))
+        p = draw(st.lists(st.integers(0, 10), min_size=k, max_size=k))
+        s = sum(ci * (100 - pi) for ci, pi in zip(c, p))
+        # Two closing rows make the group sum exactly a target t: cents b at
+        # a 1% discount (b * 99 = -b mod 100 sets the residue) and cents a at
+        # none (any multiple of 100). Only about 6% of sums ending in 50 round
+        # down in DuckDB, and none do in stretches where x * 100 lands in a
+        # binade whose ulp is 128x that of x, so t is drawn at random from a
+        # range spanning several binades.
+        rng = random.Random(draw(st.integers(0, 2**32 - 1)))
+        lo = (s + 18_000_000) // 100
+        tries = ((lo + rng.randrange(20_000_000)) * 100 + 50 for _ in range(10_000))
+        t = next(t for t in tries if _duckdb_rounds_half_cent_down(t))
+        b = 90_000 + (s - t) % 100
+        cents += c + [b, (t - s - 99 * b) // 100]
+        pcts += p + [1, 0]
+        keys += [key] * (k + 2)
+    n = len(cents)
+    return pd.DataFrame(
+        {
+            "l_orderkey": pd.array(range(n), dtype="int64"),
+            "l_partkey": pd.array(draw(st.lists(st.integers(0, 199), min_size=n, max_size=n)), dtype="int64"),
+            "l_suppkey": pd.array(draw(st.lists(st.integers(0, 9), min_size=n, max_size=n)), dtype="int64"),
+            "l_linenumber": pd.array([1] * n, dtype="int32"),
+            "l_quantity": [float(q) for q in draw(st.lists(st.integers(1, 50), min_size=n, max_size=n))],
+            "l_extendedprice": [c / 100 for c in cents],
+            "l_discount": [p / 100 for p in pcts],
+            "l_tax": [t / 100 for t in draw(st.lists(st.integers(0, 8), min_size=n, max_size=n))],
+            "l_returnflag": [f for f, _ in keys],
+            "l_linestatus": [s for _, s in keys],
+            "l_shipdate": _days(draw, n, span_days=_Q1_CUTOFF_DAYS),
+        }
+    )
+
+
+@settings(**_FUZZ_SETTINGS)
+@given(lineitem=_half_cent_lineitem_frame())
+def test_half_cent_sums_match_duckdb_oracles(spark, tmp_path_factory, lineitem):
+    tmpdir = str(tmp_path_factory.mktemp("fuzz_half_cent"))
+    for t in _TABLES:
+        if t != "lineitem":
+            shutil.copy(os.path.join(_SF0001, f"{t}.parquet"), os.path.join(tmpdir, f"{t}.parquet"))
+    _write_table(tmpdir, "lineitem", lineitem)
+    _check_parity(spark, tmpdir, ["q_tpch_q1", "q_group_agg"])

@@ -2,6 +2,8 @@
 verified against the physical plan — a fact-fact join over co-bucketed
 tables must run with NO shuffle exchange on either side."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -225,8 +227,11 @@ def test_snapshot_batch_sink_exactly_once(spark, sf_dir, tmp_path):
         snapshot_versions,
         snapshot_write_batch,
     )
+    from simple_stream_processor_spark.session import _LOCAL_CHECKPOINT_MANAGER
     from simple_stream_processor_spark.streaming.runner import stream_events
 
+    # runs under the checkpoint manager get_spark picks for local disk
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == _LOCAL_CHECKPOINT_MANAGER
     path = str(tmp_path / "snap_stream")
     sdf = stream_events(spark, sf_dir).select("event_id", "event_type", "value")
     q = (
@@ -254,3 +259,159 @@ def test_snapshot_batch_sink_exactly_once(spark, sf_dir, tmp_path):
         assert v in versions  # returned the existing commit, minted nothing
     assert snapshot_versions(path) == versions
     assert snapshot_read(spark, path).count() == total
+
+
+# --- micro-batch commit paths ------------------------------------------------
+
+
+def _typed_batch(spark):
+    """Long, double, string, null, timestamp and decimal columns, as a
+    local relation the optimiser can size (like a micro-batch's plan)."""
+    return spark.sql(
+        """
+        SELECT CAST(id AS BIGINT) AS id, CAST(x AS DOUBLE) AS x, CAST(s AS STRING) AS s,
+               CAST(n AS BIGINT) AS n, CAST(ts AS TIMESTAMP) AS ts, CAST(amt AS DECIMAL(12, 2)) AS amt
+        FROM VALUES
+          (1, 0.5, 'a', NULL, '2024-01-01 12:30:00', '1.25'),
+          (2, NULL, NULL, 7, NULL, NULL),
+          (3, -2.75, 'ü€', -1, '1999-12-31 23:59:59.123456', '-9999999999.99')
+        AS t(id, x, s, n, ts, amt)
+        """
+    )
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", value)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _commit_batches(spark, path, threshold, monkeypatch):
+    """Commit a three-row batch then an empty one under ``threshold``;
+    returns the number of commits that took the Arrow path."""
+    arrow_calls = []
+    real = storage._write_arrow
+    monkeypatch.setattr(storage, "_write_arrow", lambda df, d: arrow_calls.append(d) or real(df, d))
+    batch = _typed_batch(spark)
+    with _broadcast_threshold(spark, threshold):
+        assert storage.snapshot_write_batch(spark, batch, path, 0) == 1
+        assert storage.snapshot_write_batch(spark, batch.where(F.lit(False)), path, 1) == 2
+    return len(arrow_calls)
+
+
+@pytest.mark.parametrize("threshold, arrow_commits", [("-1", 0), ("1", 1)], ids=["broadcast-off", "threshold-1"])
+def test_snapshot_batch_arrow_and_spark_paths_read_back_equal(spark, tmp_path, monkeypatch, threshold, arrow_commits):
+    """A batch within the broadcast threshold is written from Arrow, one
+    above it by a Spark write job; both read back identically, in rows and
+    schema, at both versions (the second batch is empty). With broadcasts
+    off every batch takes the Spark path; at a 1-byte threshold only the
+    empty batch, estimated at 0 bytes, still fits."""
+    fast, slow = str(tmp_path / "fast"), str(tmp_path / "slow")
+    assert _commit_batches(spark, fast, str(64 * 1024 * 1024), monkeypatch) == 2
+    assert _commit_batches(spark, slow, threshold, monkeypatch) == arrow_commits
+    slow_files = storage._read_manifest(f"{slow}/_manifests", 1)["files"]
+    assert slow_files and not any(f.endswith("/part-00000.parquet") for f in slow_files)  # Spark part files
+
+    want = sorted(_typed_batch(spark).collect())
+    for v in (1, 2):
+        a = storage.snapshot_read(spark, fast, version=v)
+        b = storage.snapshot_read(spark, slow, version=v)
+        assert a.schema == b.schema
+        assert sorted(a.collect()) == sorted(b.collect()) == want
+
+
+@pytest.mark.parametrize("threshold", [str(64 * 1024 * 1024), "-1"], ids=["arrow", "spark"])
+def test_snapshot_batch_crash_before_manifest_rename(spark, tmp_path, monkeypatch, threshold):
+    """A crash after the batch's data is written but before its manifest
+    is renamed into place leaves the previous version as the table; the
+    replayed batch id then publishes exactly once."""
+    import os
+
+    path = str(tmp_path / "snap")
+    batch = _typed_batch(spark)
+    real_replace = os.replace
+
+    def crash_on_manifest(src, dst):
+        if "_manifests" in str(dst):
+            raise OSError("simulated crash before the manifest rename")
+        real_replace(src, dst)
+
+    with _broadcast_threshold(spark, threshold):
+        storage.snapshot_write_batch(spark, batch.where("id = 1"), path, 0)
+        monkeypatch.setattr(os, "replace", crash_on_manifest)
+        with pytest.raises(OSError, match="simulated crash"):
+            storage.snapshot_write_batch(spark, batch, path, 1)
+        monkeypatch.setattr(os, "replace", real_replace)
+
+        assert os.listdir(os.path.join(path, "data", "batch-1"))  # the data write happened
+        assert storage.snapshot_versions(path) == [1]
+        assert [r.id for r in storage.snapshot_read(spark, path).collect()] == [1]
+
+        assert storage.snapshot_write_batch(spark, batch, path, 1) == 2
+        assert storage.snapshot_write_batch(spark, batch, path, 1) == 2  # replay again: no-op
+        assert storage.snapshot_versions(path) == [1, 2]
+        assert sorted(r.id for r in storage.snapshot_read(spark, path).collect()) == [1, 1, 2, 3]
+
+
+def _manifest_opens_per_commit(spark, path, n_versions, monkeypatch) -> int:
+    """Fake ``n_versions`` committed batches (ids 0..n-1), then count how
+    many manifests one new commit and one replay of the newest id open."""
+    import builtins
+    import json
+    import os
+
+    mdir = os.path.join(path, "_manifests")
+    os.makedirs(mdir)
+    for v in range(1, n_versions + 1):
+        with open(os.path.join(mdir, f"v{v}.json"), "w") as fh:
+            json.dump({"version": v, "batch_id": v - 1, "files": []}, fh)
+    opened = []
+
+    def counting_open(file, mode="r", *args, **kwargs):
+        if "_manifests" in str(file) and "r" in mode:
+            opened.append(file)
+        return builtins.open(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(storage, "open", counting_open, raising=False)
+    batch = _typed_batch(spark)
+    assert storage.snapshot_write_batch(spark, batch, path, n_versions) == n_versions + 1
+    assert storage.snapshot_write_batch(spark, batch, path, n_versions) == n_versions + 1
+    monkeypatch.undo()
+    return len(opened)
+
+
+def test_snapshot_batch_commit_reads_a_constant_number_of_manifests(spark, tmp_path, monkeypatch):
+    """Batch ids only grow within a checkpoint, so a new commit reads the
+    latest manifest alone instead of every manifest: the count of opened
+    manifests is the same at version 10 and at version 1,000."""
+    small = _manifest_opens_per_commit(spark, str(tmp_path / "v10"), 10, monkeypatch)
+    large = _manifest_opens_per_commit(spark, str(tmp_path / "v1000"), 1000, monkeypatch)
+    assert small == large == 3  # commit: latest; replay of the latest id: latest + itself
+
+
+def test_snapshot_batch_after_snapshot_write_scans_for_replays(spark, tmp_path):
+    """A table whose latest manifest carries no batch id (written by
+    ``snapshot_write``) falls back to scanning every manifest: a batch id
+    committed before it is still recognised as a replay."""
+    path = str(tmp_path / "mixed")
+    batch = _typed_batch(spark)
+    assert storage.snapshot_write_batch(spark, batch, path, 5) == 1
+    assert storage.snapshot_write(spark, batch.where("id = 1"), path) == 2
+    assert storage.snapshot_write_batch(spark, batch, path, 5) == 1  # replay: no-op
+    assert storage.snapshot_write_batch(spark, batch, path, 0) == 3  # never committed
+    assert storage.snapshot_read(spark, path).count() == 7
+
+
+def test_get_spark_uses_filesystem_checkpoint_manager_on_local_disk(spark):
+    """On a ``file:`` default filesystem the session renames checkpoint
+    files with RawLocalFileSystem (one File.renameTo) instead of the
+    FileContext manager, whose rename forks ``readlink`` without Hadoop's
+    native libraries."""
+    from simple_stream_processor_spark import session
+
+    assert spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS").startswith("file:")
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == session._LOCAL_CHECKPOINT_MANAGER
