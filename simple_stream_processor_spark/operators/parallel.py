@@ -17,7 +17,7 @@
   pipeline-decoupling exchange and provably does not change the bag of
   rows. Backpressure itself lives in Structured Streaming's source rate
   limits (maxOffsetsPerTrigger / maxFilesPerTrigger), see
-  streaming/backpressure.py.
+  ``streaming/runner.stream_events(max_files_per_trigger=...)``.
 
 Fail-fast parity: parallelism <= 0 raises (reference Stream.scala:104),
 buffer_size <= 0 raises (reference Node.scala:216).

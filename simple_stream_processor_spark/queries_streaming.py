@@ -11,17 +11,106 @@ import csv
 import glob
 import os
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from simple_stream_processor_spark.registry import query
-from simple_stream_processor_spark.streaming.lifecycle import consume_managed, managed_source_run
-from simple_stream_processor_spark.streaming.runner import TMP_ROOT, run_stream_to_memory, stream_events, stream_schema
-from simple_stream_processor_spark.streaming.windows import streaming_count_window, streaming_tumbling_window
+from simple_stream_processor_spark import queries_llmdata as llmdata
+from simple_stream_processor_spark import queries_relational_ext as relext
+from simple_stream_processor_spark.operators import dedup, multimodal
+from simple_stream_processor_spark.operators import text as text_ops
+from simple_stream_processor_spark.operators import windows as W
+from simple_stream_processor_spark.registry import ORACLES, query
 from simple_stream_processor_spark.streaming.dedup import streaming_dedup
-from simple_stream_processor_spark.operators.text import STOPWORDS
+from simple_stream_processor_spark.streaming.funnel import streaming_funnel
+from simple_stream_processor_spark.streaming.lifecycle import consume_managed, managed_source_run
+from simple_stream_processor_spark.streaming.ohlc import ohlc_bars_stateful, ohlc_latest_bars, prepare_ohlc_events
+from simple_stream_processor_spark.streaming.runner import TMP_ROOT, _drain, run_stream_to_memory, stream_events, stream_table
+from simple_stream_processor_spark.streaming.windows import (
+    streaming_count_window,
+    streaming_tumbling_window,
+    streaming_watermark_cadence,
+)
 from simple_stream_processor_spark.tables import load_table
+
+
+# Shared state heads: each drains one bounded streaming aggregate in
+# complete mode, and every twin over that state calls the same head.
+
+
+def _streaming_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, day, cents) daily table as streaming state —
+    commutative integer sums bounded at types x days rows forever — drained
+    complete; ``day`` is the epoch day. The raw read keeps ts
+    TIMESTAMP_NTZ, and the cast pins it to the session's UTC."""
+    daily = stream_table(spark, sf_dir, "events").groupBy(
+        "event_type",
+        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
+    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
+    return run_stream_to_memory(daily, output_mode="complete")[0]
+
+
+def _streaming_daily_by_type_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The same (event_type, day, cents) state with ``day`` as the
+    date_trunc TIMESTAMP, for tails that read it as a date."""
+    daily = stream_events(spark, sf_dir).groupBy(
+        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
+    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
+    return run_stream_to_memory(daily, output_mode="complete")[0]
+
+
+def _streaming_daily_total(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The global (day, cents) daily table as streaming state — one integer
+    row per epoch day forever — drained complete."""
+    daily = stream_events(spark, sf_dir).groupBy(
+        F.expr("unix_millis(ts) div 86400000").alias("day")
+    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
+    return run_stream_to_memory(daily, output_mode="complete")[0]
+
+
+def _streaming_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct (user_id, day) active-day table as streaming state —
+    set-union semantics (a count per cell whose value is never read), so
+    replays and batching are invisible; bounded by users x active days."""
+    cells = stream_table(spark, sf_dir, "events").groupBy(
+        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return run_stream_to_memory(cells, output_mode="complete")[0]
+
+
+def _streaming_presence_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (event_type, user_id, day) presence state — counts commutative,
+    bounded by active user-days — shared by the paired/repeated-measures
+    twins (McNemar, Cochran)."""
+    pres = stream_events(spark, sf_dir).groupBy(
+        "event_type", "user_id", F.expr("unix_millis(ts) div 86400000").alias("day")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    return run_stream_to_memory(pres, output_mode="complete")[0]
+
+
+def _streaming_user_rollup(spark: SparkSession, sf_dir: str, *aggs) -> DataFrame:
+    """A per-user streaming rollup drained complete — one state row per user
+    forever; the shared head of the user-keyed experiment/survival twins.
+    The raw read keeps ts TIMESTAMP_NTZ."""
+    u = stream_table(spark, sf_dir, "events").groupBy("user_id").agg(*aggs)
+    return run_stream_to_memory(u, output_mode="complete")[0]
+
+
+def _streaming_score_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (source, score-bin, n) count table as streaming state: the
+    score bins to the fixed 1e4 integer grid inside the narrow stream
+    stage, so state is bounded at sources x 10k cells at any stream length,
+    and counts are commutative, so batching is invisible. One state table
+    serves every drift readout (KS, Wasserstein, Cramér-von Mises)."""
+    cnt = (
+        stream_table(spark, sf_dir, "documents")
+        .select("source", llmdata.ks_score_bin().alias("b"))
+        .groupBy("source", "b")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return run_stream_to_memory(cnt, output_mode="complete")[0]
 
 
 @query(
@@ -342,8 +431,6 @@ def q_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage counts as the batch funnel — the oracle IS q_funnel's. Proves
     the engine's arbitrary-stateful-operator surface computes the exact
     cross-event answer the declarative form does."""
-    from simple_stream_processor_spark.streaming.funnel import streaming_funnel
-
     sdf = stream_events(spark, sf_dir)
     out, _ = run_stream_to_memory(
         streaming_funnel(sdf, ["view", "click", "purchase"]), output_mode="update"
@@ -385,7 +472,7 @@ def q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy(F.desc("n"), F.asc("user_id")).limit(10)
 
 
-_STOP_IN_STREAM = ", ".join(f"'{s}'" for s in STOPWORDS)
+_STOP_IN_STREAM = ", ".join(f"'{s}'" for s in text_ops.STOPWORDS)
 
 
 @query(
@@ -413,10 +500,7 @@ def q_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental engine to the curation pipeline: at scale this runs
     forever, admitting batches under maxFilesPerTrigger backpressure,
     and the gate's cost stays scan-bound per micro-batch."""
-    from simple_stream_processor_spark.operators import text as text_ops
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = spark.readStream.schema(raw_schema).option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     t = text_ops.tokens(F.col("text"))
     n_tok = F.size(t).cast("double")
     n_stop = F.size(F.filter(t, lambda x: x.isin(*text_ops.STOPWORDS))).cast("double")
@@ -461,8 +545,6 @@ def q_streaming_watermark_cadence(spark: SparkSession, sf_dir: str) -> DataFrame
     100 records; a record is late iff ts < the watermark in force at its
     arrival. The batch emulation (q_watermark_cadence) is the oracle —
     identical blocks because arrival order is the dense event_id order."""
-    from simple_stream_processor_spark.streaming.windows import streaming_watermark_cadence
-
     sdf = stream_events(spark, sf_dir)
     out = streaming_watermark_cadence(sdf, "event_id", "ts", 100)
     rows, _ = run_stream_to_memory(out, output_mode="append")
@@ -497,10 +579,7 @@ def q_streaming_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     batch q_multimodal_decode oracle. At scale this is the continuous
     ingest shape: new media files land, the trigger admits them, decode
     stays narrow in the executors."""
-    from simple_stream_processor_spark.operators import multimodal
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = spark.readStream.schema(raw_schema).option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     media = multimodal.documents_as_ppm(sdf, width=16, height=8)
     feats = multimodal.decode_image(media)
     out = feats.select(
@@ -518,13 +597,7 @@ def q_streaming_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     return rows
 
 
-def _zscore_oracle() -> str:
-    from simple_stream_processor_spark.queries_relational_ext import ZSCORE_ORACLE
-
-    return ZSCORE_ORACLE
-
-
-@query("q_streaming_zscore", oracle=_zscore_oracle())
+@query("q_streaming_zscore", oracle=relext.ZSCORE_ORACLE)
 def q_streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_rolling_zscore: the daily revenue aggregate is
     maintained INCREMENTALLY by the streaming engine (one counter row per
@@ -535,23 +608,10 @@ def q_streaming_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch path by construction: the scoring stage is the same
     operators/windows.py:rolling_zscore call, and both hash-match the
     identical batch SQL oracle."""
-    from simple_stream_processor_spark.operators import windows as W
-
-    sdf = stream_events(spark, sf_dir)
-    daily = sdf.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"))
-    state, _ = run_stream_to_memory(daily, output_mode="complete")
-    return W.rolling_zscore(state)
+    return W.rolling_zscore(_streaming_daily_by_type_ts(spark, sf_dir))
 
 
-def _cms_oracle() -> str:
-    from simple_stream_processor_spark.queries_llmdata import CMS_ORACLE
-
-    return CMS_ORACLE
-
-
-@query("q_streaming_cms", oracle=_cms_oracle())
+@query("q_streaming_cms", oracle=llmdata.CMS_ORACLE)
 def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_cms_heavy_hitters: the d x w count-min cell
     table is maintained INCREMENTALLY — the streaming aggregate's state
@@ -561,17 +621,10 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch path and hash-matches the identical oracle. The exact
     counts on the probe side are evaluation-only (you could not afford
     them on a real unbounded stream — that is what the sketch is for)."""
-    from simple_stream_processor_spark.queries_llmdata import cms_bucket_cols
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     tok_stream = sdf.select(F.explode(F.split("text", " ")).alias("token"))
     cells = (
-        tok_stream.select(F.posexplode(F.array(*cms_bucket_cols())).alias("i", "bucket"))
+        tok_stream.select(F.posexplode(F.array(*llmdata.cms_bucket_cols())).alias("i", "bucket"))
         .groupBy("i", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -585,7 +638,7 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("true_n").desc(), "token")
         .limit(10)
     )
-    probe = top.select("token", "true_n", F.posexplode(F.array(*cms_bucket_cols())).alias("i", "bucket"))
+    probe = top.select("token", "true_n", F.posexplode(F.array(*llmdata.cms_bucket_cols())).alias("i", "bucket"))
     return (
         F.broadcast(probe)
         .join(cms, ["i", "bucket"])
@@ -598,13 +651,7 @@ def q_streaming_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _merge_oracle() -> str:
-    from simple_stream_processor_spark.queries_relational_ext import MERGE_ORACLE
-
-    return MERGE_ORACLE
-
-
-@query("q_streaming_merge_upsert", oracle=_merge_oracle())
+@query("q_streaming_merge_upsert", oracle=relext.MERGE_ORACLE)
 def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_merge_upsert — the lakehouse incremental-MERGE
     pattern: the post-cut change feed arrives in multiple micro-batches
@@ -616,14 +663,8 @@ def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction + localCheckpoint (O(1) lineage); the final state then
     MERGEs into the base snapshot through the same merge_apply stage as
     the batch query — hash-matching the identical oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import (
-        MERGE_CUT,
-        merge_apply,
-        merge_latest_per_key,
-    )
-
     ev = load_table(spark, "events", sf_dir)
-    cut = F.lit(MERGE_CUT).cast("timestamp")
+    cut = F.lit(relext.MERGE_CUT).cast("timestamp")
     post = ev.where(F.col("ts") >= cut).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -644,38 +685,19 @@ def q_streaming_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     state: dict = {"df": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = merge_latest_per_key(batch_df)
+        latest = relext.merge_latest_per_key(batch_df)
         cur = state["df"]
         merged = latest if cur is None else cur.unionByName(latest)
-        state["df"] = merge_latest_per_key(merged).localCheckpoint()
+        state["df"] = relext.merge_latest_per_key(merged).localCheckpoint()
 
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS",
-            str(min(spark.sparkContext.defaultParallelism, 8)),
-        ),
-    )
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(feed_dir, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        from simple_stream_processor_spark.streaming.runner import audit_record
-        audit_record(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    _drain(spark, sdf.writeStream.foreachBatch(merge_batch), os.path.join(feed_dir, "_chk"), 120)
 
     updates = state["df"]
     if updates is None:  # no post-cut rows: pure 'unchanged' snapshot
         updates = spark.createDataFrame(
             [], "user_id long, value double, ts timestamp, event_id long, event_type string"
         )
-    return merge_apply(ev.where(F.col("ts") < cut), updates)
+    return relext.merge_apply(ev.where(F.col("ts") < cut), updates)
 
 
 @query(
@@ -724,13 +746,7 @@ def q_streaming_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_oracle() -> str:
-    from simple_stream_processor_spark.queries_llmdata import BLOOM_ORACLE
-
-    return BLOOM_ORACLE
-
-
-@query("q_streaming_bloom", oracle=_bloom_oracle())
+@query("q_streaming_bloom", oracle=llmdata.BLOOM_ORACLE)
 def q_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_bloom_index: the per-source Bloom word tables
     are maintained INCREMENTALLY — the streaming aggregate's state IS the
@@ -742,18 +758,7 @@ def q_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical oracle. This is the continuous-ingest membership index: the
     crawl absorbs forever, rollups stay 32 integer ORs, and a probe never
     touches history."""
-    import os as _os
-
-    from simple_stream_processor_spark.operators import dedup
-    from simple_stream_processor_spark.queries_llmdata import bloom_report
-    from simple_stream_processor_spark.tables import load_table
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     pos = sdf.select(
         F.col("source").alias("bloom_group"),
         F.explode(dedup.bloom_positions(F.col("text"))).alias("p"),
@@ -769,17 +774,10 @@ def q_streaming_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words, _ = run_stream_to_memory(cells, output_mode="complete")
     docs = load_table(spark, "documents", sf_dir)
-    return bloom_report(spark, words, docs)
+    return llmdata.bloom_report(spark, words, docs)
 
 
-def _entropy_oracle() -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_corpus_entropy"]
-
-
-@query("q_streaming_entropy", oracle=_entropy_oracle())
+@query("q_streaming_entropy", oracle=ORACLES["q_corpus_entropy"])
 def q_streaming_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_corpus_entropy: the (source, token) count table
     is maintained INCREMENTALLY in the streaming aggregate's state —
@@ -791,33 +789,17 @@ def q_streaming_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     and hash-matches the identical oracle — a live corpus-health panel
     over continuous ingest: entropy collapse or KL drift shows up
     per-trigger without ever re-scanning history."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import entropy_report
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     st = (
         sdf.select("source", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     drained, _ = run_stream_to_memory(st, output_mode="complete")
-    return entropy_report(drained)
+    return llmdata.entropy_report(drained)
 
 
-def _ks_oracle() -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_ks_drift"]
-
-
-@query("q_streaming_ks", oracle=_ks_oracle())
+@query("q_streaming_ks", oracle=ORACLES["q_ks_drift"])
 def q_streaming_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_ks_drift: the (source, score-bin) count table
     is maintained incrementally in streaming state — the score bins to
@@ -827,23 +809,7 @@ def q_streaming_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     The drained table flows through the same ks_report tail as the batch
     path and hash-matches the identical oracle — continuous
     distribution-drift monitoring without history re-scans."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import ks_report, ks_score_bin
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    cnt = (
-        sdf.select("source", ks_score_bin().alias("b"))
-        .groupBy("source", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    drained, _ = run_stream_to_memory(cnt, output_mode="complete")
-    return ks_report(drained)
+    return llmdata.ks_report(_streaming_score_bins(spark, sf_dir))
 
 
 @query(
@@ -899,16 +865,7 @@ def q_streaming_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded covariance is engine-exact), then flow through the same
     pca_power_iterate tail as the batch path. This is how you keep a live
     eigenvector over a growing corpus without ever re-scanning it."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import pca_power_iterate
-
-    raw_schema = stream_schema(spark, sf_dir, "embeddings")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     entries = F.concat(
         F.flatten(
@@ -964,17 +921,10 @@ def q_streaming_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     mu_pos = mu.select(F.col("mu_i").alias("pos"))
-    return pca_power_iterate(cov, mu_pos)
+    return llmdata.pca_power_iterate(cov, mu_pos)
 
 
-def _stump_oracle() -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_decision_stump"]
-
-
-@query("q_streaming_stump", oracle=_stump_oracle())
+@query("q_streaming_stump", oracle=ORACLES["q_decision_stump"])
 def q_streaming_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming decision-stump twin (online histogram tree learning):
     the features×32 Gini histogram accumulates INCREMENTALLY in streaming
@@ -987,22 +937,12 @@ def q_streaming_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained histogram flows through the same stump_best_split tail as
     the batch path and hash-matches the identical oracle — the split
     quality a fresh tree would get RIGHT NOW, updated per trigger."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import stump_best_split, stump_features
-    from simple_stream_processor_spark.tables import load_table
-
-    rng = stump_features(load_table(spark, "documents", sf_dir)).groupBy(
+    rng = llmdata.stump_features(load_table(spark, "documents", sf_dir)).groupBy(
         F.col("feature").alias("r_feature")
     ).agg(F.min("val").alias("lo"), F.max("val").alias("hi"))
 
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    binned = stump_features(sdf).join(F.broadcast(rng), F.col("feature") == F.col("r_feature")).select(
+    sdf = stream_table(spark, sf_dir, "documents")
+    binned = llmdata.stump_features(sdf).join(F.broadcast(rng), F.col("feature") == F.col("r_feature")).select(
         "feature",
         "pos",
         F.expr("CAST((val - lo) * 32 div (hi - lo + 1) AS BIGINT)").alias("bin"),
@@ -1011,17 +951,10 @@ def q_streaming_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"), F.sum("pos").alias("np")
     )
     drained, _ = run_stream_to_memory(hist, output_mode="complete")
-    return stump_best_split(drained, rng)
+    return llmdata.stump_best_split(drained, rng)
 
 
-def _survival_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_survival_curve"]
-
-
-@query("q_streaming_survival", oracle=_survival_oracle())
+@query("q_streaming_survival", oracle=ORACLES["q_survival_curve"])
 def q_streaming_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Kaplan-Meier twin: per-user (first, last) event times
     live in streaming state — min/max are commutative and idempotent, so
@@ -1032,29 +965,11 @@ def q_streaming_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows through the same km_curve tail as the batch path (the horizon
     is the max over drained state) and hash-matches the identical
     oracle — a live survival curve, updated per trigger."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import km_curve
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    u = sdf.groupBy("user_id").agg(F.min("ts").alias("f"), F.max("ts").alias("l"))
-    drained, _ = run_stream_to_memory(u, output_mode="complete")
-    return km_curve(drained)
+    drained = _streaming_user_rollup(spark, sf_dir, F.min("ts").alias("f"), F.max("ts").alias("l"))
+    return relext.km_curve(drained)
 
 
-def _acf_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_acf_daily"]
-
-
-@query("q_streaming_acf", oracle=_acf_oracle())
+@query("q_streaming_acf", oracle=ORACLES["q_acf_daily"])
 def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ACF twin: the (event_type, day, cents) daily table IS
     the streaming state — integer-cent sums are commutative, so arrival
@@ -1063,31 +978,10 @@ def q_streaming_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound). Drained cells flow through the shared acf_tail, hash-matching
     the identical batch oracle — live seasonality diagnostics per
     trigger without ever re-scanning the stream."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import acf_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return acf_tail(drained)
+    return relext.acf_tail(_streaming_daily_by_type_ts(spark, sf_dir))
 
 
-def _lag_features_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_lag_features"]
-
-
-@query("q_streaming_lag_features", oracle=_lag_features_oracle())
+@query("q_streaming_lag_features", oracle=ORACLES["q_lag_features"])
 def q_streaming_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming feature-store twin: the (event_type, day, cents, n)
     daily table lives in streaming state (commutative integer sums —
@@ -1096,16 +990,7 @@ def q_streaming_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_lag_features, hash-matching the same oracle — fresh model
     features per trigger without re-scanning history (the feature-store
     'online materialization' path)."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import lag_features_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     daily = sdf.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(
@@ -1113,17 +998,10 @@ def q_streaming_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
     )
     drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return lag_features_tail(drained)
+    return relext.lag_features_tail(drained)
 
 
-def _ab_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_ab_test"]
-
-
-@query("q_streaming_ab", oracle=_ab_oracle())
+@query("q_streaming_ab", oracle=ORACLES["q_ab_test"])
 def q_streaming_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A/B readout twin: per-user (purchases, events) counts
     live in streaming state — commutative sums, one row per user, so
@@ -1134,32 +1012,16 @@ def q_streaming_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     an experimentation platform actually runs (with the usual peeking
     caveat: a fixed-horizon z peeked continuously needs sequential
     correction; the statistic itself is unchanged)."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import ab_test_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    u = sdf.groupBy("user_id").agg(
+    drained = _streaming_user_rollup(
+        spark,
+        sf_dir,
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("n_purchase"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    drained, _ = run_stream_to_memory(u, output_mode="complete")
-    return ab_test_tail(drained)
+    return relext.ab_test_tail(drained)
 
 
-def _ttc_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_time_to_convert"]
-
-
-@query("q_streaming_time_to_convert", oracle=_ttc_oracle())
+@query("q_streaming_time_to_convert", oracle=ORACLES["q_time_to_convert"])
 def q_streaming_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming funnel-latency twin: per-user first-view /
     first-purchase conditional mins ARE the streaming state — min is
@@ -1168,21 +1030,12 @@ def q_streaming_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume. Drained state shares time_to_convert_tail, hash-matching
     the batch oracle — the conversion-latency SLA dashboard, updated
     per trigger."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import time_to_convert_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    u = sdf.groupBy("user_id").agg(
+    drained = _streaming_user_rollup(
+        spark,
+        sf_dir,
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("first_view"),
         F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("first_purchase"),
     )
-    drained, _ = run_stream_to_memory(u, output_mode="complete")
     # raw streaming read yields TIMESTAMP_NTZ; the session tz is pinned
     # UTC, so this cast is value-preserving (same normalization as
     # tables._normalize_timestamps on the batch path)
@@ -1191,17 +1044,10 @@ def q_streaming_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("first_view").cast("timestamp").alias("first_view"),
         F.col("first_purchase").cast("timestamp").alias("first_purchase"),
     )
-    return time_to_convert_tail(drained)
+    return relext.time_to_convert_tail(drained)
 
 
-def _retention_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_retention_curve"]
-
-
-@query("q_streaming_retention", oracle=_retention_oracle())
+@query("q_streaming_retention", oracle=ORACLES["q_retention_curve"])
 def q_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming retention twin: the distinct (user, active-day) table
     IS the streaming state — set-union semantics (a count per cell
@@ -1210,63 +1056,22 @@ def q_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Drained days flow through the shared retention_tail, hash-matching
     the batch oracle — the growth dashboard's D1/D7/D30 updated per
     trigger."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import retention_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    cells = sdf.groupBy(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    active = drained.select("user_id", F.col("day").cast("date").alias("ad"))
-    return retention_tail(active)
+    active = _streaming_user_days(spark, sf_dir).select("user_id", F.col("day").cast("date").alias("ad"))
+    return relext.retention_tail(active)
 
 
-def _active_users_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_active_users"]
-
-
-@query("q_streaming_active_users", oracle=_active_users_oracle())
+@query("q_streaming_active_users", oracle=ORACLES["q_active_users"])
 def q_streaming_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DAU/WAU/MAU twin: the same distinct (user, active-day)
     state as q_streaming_retention (set-union semantics — replays and
     batching invisible, users×days bound) drained through the shared
     active_users_tail, hash-matching the batch oracle — the live growth
     dashboard from the state a retention monitor already carries."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import active_users_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    cells = sdf.groupBy(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    return active_users_tail(drained.select("user_id", F.col("day").cast("date").alias("d")))
+    days = _streaming_user_days(spark, sf_dir).select("user_id", F.col("day").cast("date").alias("d"))
+    return relext.active_users_tail(days)
 
 
-def _weekday_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_weekday_profile"]
-
-
-@query("q_streaming_weekday_profile", oracle=_weekday_oracle())
+@query("q_streaming_weekday_profile", oracle=ORACLES["q_weekday_profile"])
 def q_streaming_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming weekday-profile twin: the SAME daily integer-cent state
     as q_streaming_acf (commutative sums, types×days bound) drained
@@ -1274,30 +1079,10 @@ def q_streaming_weekday_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — one state store can feed ACF, lag features, AND the
     weekday profile per trigger (the state-reuse argument: diagnostics
     are tails over shared bounded state, not separate scans)."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import weekday_profile_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return weekday_profile_tail(drained)
+    return relext.weekday_profile_tail(_streaming_daily_by_type_ts(spark, sf_dir))
 
 
-def _dsir_oracle() -> str:
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_dsir_select"]
-
-
-@query("q_streaming_dsir", oracle=_dsir_oracle())
+@query("q_streaming_dsir", oracle=ORACLES["q_dsir_select"])
 def q_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_dsir_select (L62b): the (is_target, bucket)
     token-count table — the sufficient statistic for the DSIR importance
@@ -1310,26 +1095,19 @@ def q_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical batch oracle. This is how target-domain selection runs
     on a live crawl: the ratio model updates continuously; scoring any
     batch of candidate docs is a broadcast join against 4096 rows."""
-    from simple_stream_processor_spark.queries_llmdata import dsir_bucket, dsir_tail, dsir_tokens
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     tok_stream = (
         sdf.select("source", F.explode(F.split(F.col("text"), " ")).alias("w"))
         .where(F.col("w") != "")
-        .select("source", dsir_bucket(F.col("w")).alias("b"))
+        .select("source", llmdata.dsir_bucket(F.col("w")).alias("b"))
     )
     counts_stream = tok_stream.groupBy(
         (F.col("source") == "src0").alias("is_target"), "b"
     ).agg(F.count(F.lit(1)).alias("cnt"))
     counts, _ = run_stream_to_memory(counts_stream, output_mode="complete")
 
-    pool_tok = dsir_tokens(load_table(spark, "documents", sf_dir)).where(F.col("source") != "src0")
-    return dsir_tail(counts, pool_tok)
+    pool_tok = llmdata.dsir_tokens(load_table(spark, "documents", sf_dir)).where(F.col("source") != "src0")
+    return llmdata.dsir_tail(counts, pool_tok)
 
 
 def dsir_score_stream(
@@ -1365,17 +1143,13 @@ def dsir_score_stream(
     batch_id). At scale the per-batch scored output would stream to a
     sink instead of unioning; the state-side cost is one broadcast join
     against <= 2xB rows per batch either way."""
-    from functools import reduce
-
-    from simple_stream_processor_spark.queries_llmdata import dsir_tail, dsir_tokens
-
     sdf = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(feed_dir)
     state: dict = {"counts": None, "scored": []}
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if on_batch is not None:
             on_batch(batch_id, batch_df)
-        tok = dsir_tokens(batch_df)
+        tok = llmdata.dsir_tokens(batch_df)
         binc = tok.groupBy((F.col("source") == target_source).alias("is_target"), "b").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -1387,29 +1161,10 @@ def dsir_score_stream(
         )
         state["counts"] = merged.localCheckpoint()  # eager: O(1) lineage, stable snapshot
         pool = tok.where(F.col("source") != target_source).select("doc_id", "source", "b")
-        scored = dsir_tail(state["counts"], pool).withColumn("batch_id", F.lit(batch_id))
+        scored = llmdata.dsir_tail(state["counts"], pool).withColumn("batch_id", F.lit(batch_id))
         state["scored"].append(scored.localCheckpoint())  # eager: pin the state in force NOW
 
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS",
-            str(min(spark.sparkContext.defaultParallelism, 8)),
-        ),
-    )
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", os.path.join(feed_dir, "_chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        from simple_stream_processor_spark.streaming.runner import audit_record
-        audit_record(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    _drain(spark, sdf.writeStream.foreachBatch(handle), os.path.join(feed_dir, "_chk"), 120)
 
     if not state["scored"]:
         return spark.createDataFrame(
@@ -1418,13 +1173,7 @@ def dsir_score_stream(
     return reduce(DataFrame.unionByName, state["scored"])
 
 
-def _hll_oracle() -> str:
-    from simple_stream_processor_spark.queries_relational_ext import HLL_ORACLE
-
-    return HLL_ORACLE
-
-
-@query("q_streaming_hll", oracle=_hll_oracle())
+@query("q_streaming_hll", oracle=relext.HLL_ORACLE)
 def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_hll_portable (N35b): the 256-register-per-group
     HLL table is maintained INCREMENTALLY — the streaming aggregate's
@@ -1438,29 +1187,18 @@ def q_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted-bucket fold + harmonic estimate) and hash-match the identical
     batch oracle — continuous distinct-user dashboards over an unbounded
     stream with O(1) state and no corpus re-scan."""
-    from simple_stream_processor_spark.queries_relational_ext import (
-        hll_estimate_tail,
-        hll_rho_cols,
-    )
-
     sdf = stream_events(spark, sf_dir)
-    b, rho = hll_rho_cols()
+    b, rho = relext.hll_rho_cols()
     reg_stream = (
         sdf.select("event_type", b, rho)
         .groupBy("event_type", "b")
         .agg(F.max("rho").alias("rho"))
     )
     reg, _ = run_stream_to_memory(reg_stream, output_mode="complete")
-    return hll_estimate_tail(reg)
+    return relext.hll_estimate_tail(reg)
 
 
-def _emd_oracle() -> str:
-    from simple_stream_processor_spark.queries_llmdata import EMD_ORACLE
-
-    return EMD_ORACLE
-
-
-@query("q_streaming_wasserstein", oracle=_emd_oracle())
+@query("q_streaming_wasserstein", oracle=llmdata.EMD_ORACLE)
 def q_streaming_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_wasserstein_drift: the SAME (source, score-bin)
     count state as q_streaming_ks — bounded at sources × 10k cells at any
@@ -1470,33 +1208,10 @@ def q_streaming_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
     readouts (max-gap KS and mass-weighted W1): the monitoring pattern
     where adding a metric costs a new 20-row tail, not a new scan or new
     state."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import emd_report, ks_score_bin
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    cnt = (
-        sdf.select("source", ks_score_bin().alias("b"))
-        .groupBy("source", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    drained, _ = run_stream_to_memory(cnt, output_mode="complete")
-    return emd_report(drained)
+    return llmdata.emd_report(_streaming_score_bins(spark, sf_dir))
 
 
-def _ewma_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_ewma_smooth"]
-
-
-@query("q_streaming_ewma", oracle=_ewma_oracle())
+@query("q_streaming_ewma", oracle=ORACLES["q_ewma_smooth"])
 def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EWMA twin: the (event_type, day_s, cents) daily table
     IS the streaming state — commutative integer-cent sums, so arrival
@@ -1506,32 +1221,16 @@ def q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     restatement of the smoothing recursion, sorted-fold double sum),
     hash-matching the identical batch oracle — a live smoothed
     alerting baseline per trigger without re-scanning the stream."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import ewma_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     daily = sdf.groupBy(
         "event_type",
         F.unix_timestamp(F.date_trunc("day", F.col("ts"))).alias("day_s"),
     ).agg(F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("cents"))
     drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return ewma_tail(drained)
+    return relext.ewma_tail(drained)
 
 
-def _zonemap_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_zonemap_prune"]
-
-
-@query("q_streaming_zonemap", oracle=_zonemap_oracle())
+@query("q_streaming_zonemap", oracle=ORACLES["q_zonemap_prune"])
 def q_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming zone-map twin: the per-(layout, bucket) zone table
     (count / min-day / max-day) IS the streaming state — all three are
@@ -1542,40 +1241,21 @@ def q_streaming_zonemap(spark: SparkSession, sf_dir: str) -> DataFrame:
     zonemap_tail and hash-match the identical batch oracle — the
     skip-scan audit stays current per trigger without re-scanning the
     table."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import (
-        _zonemap_assign,
-        zonemap_tail,
-    )
-
-    raw_schema = stream_schema(spark, sf_dir, "orders")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "orders")
     o = sdf.select(
         F.col("o_orderkey").alias("ok"),
         F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long").alias("day"),
     )
-    g = _zonemap_assign(o).groupBy("layout", "bucket").agg(
+    g = relext._zonemap_assign(o).groupBy("layout", "bucket").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min("day").alias("min_day"),
         F.max("day").alias("max_day"),
     )
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return zonemap_tail(drained)
+    return relext.zonemap_tail(drained)
 
 
-def _novelty_oracle() -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_ngram_novelty"]
-
-
-@query("q_streaming_novelty", oracle=_novelty_oracle())
+@query("q_streaming_novelty", oracle=ORACLES["q_ngram_novelty"])
 def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming novelty twin: the (bucket, gram, cnt) table IS the
     streaming state — counts are commutative and bucket = doc_id//50 is
@@ -1586,16 +1266,7 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     State bounded by Σ per-bucket distinct trigrams — the same
     cardinality the batch exchange carries. Drained state shares
     novelty_tail and hash-matches the identical batch oracle."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import novelty_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     words = sdf.select("doc_id", F.split("text", " ").alias("w"))
     n = F.size("w")
     grams = (
@@ -1619,17 +1290,10 @@ def q_streaming_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("doc_id") / 50).cast("long").alias("bucket"), "gram"
     ).agg(F.count(F.lit(1)).alias("cnt"))
     drained, _ = run_stream_to_memory(g3, output_mode="complete")
-    return novelty_tail(drained)
+    return llmdata.novelty_tail(drained)
 
 
-def _heaps_oracle() -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_heaps_fit"]
-
-
-@query("q_streaming_heaps", oracle=_heaps_oracle())
+@query("q_streaming_heaps", oracle=ORACLES["q_heaps_fit"])
 def q_streaming_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Heaps'-law twin: the (bucket, word, cnt) state — same
     mergeable shape as the novelty twin at word granularity — drained
@@ -1637,16 +1301,7 @@ def q_streaming_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crawl still finding new language?) and the capacity forecast
     for vocab-sized state, updated per trigger. Hash-matches the
     identical batch oracle."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import heaps_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     tok = sdf.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).where(F.length("word") > 0)
@@ -1654,17 +1309,10 @@ def q_streaming_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("doc_id") / 50).cast("long").alias("bucket"), "word"
     ).agg(F.count(F.lit(1)).alias("cnt"))
     drained, _ = run_stream_to_memory(w3, output_mode="complete")
-    return heaps_tail(drained)
+    return llmdata.heaps_tail(drained)
 
 
-def _saturation_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_user_saturation"]
-
-
-@query("q_streaming_saturation", oracle=_saturation_oracle())
+@query("q_streaming_saturation", oracle=ORACLES["q_user_saturation"])
 def q_streaming_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming saturation twin: the (user_id, day, n) user-day table IS
     the streaming state (commutative counts; a user's first day is a MIN
@@ -1673,32 +1321,16 @@ def q_streaming_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth accounting — is today's traffic acquisition or retention —
     per trigger, without re-scanning history. Hash-matches the identical
     batch oracle."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import saturation_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     ud = sdf.groupBy(
         "user_id",
         F.floor(F.unix_timestamp(F.date_trunc("day", F.col("ts"))) / 86400).cast("long").alias("day"),
     ).agg(F.count(F.lit(1)).alias("n"))
     drained, _ = run_stream_to_memory(ud, output_mode="complete")
-    return saturation_tail(drained)
+    return relext.saturation_tail(drained)
 
 
-def _mi_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_mutual_information"]
-
-
-@query("q_streaming_mi", oracle=_mi_oracle())
+@query("q_streaming_mi", oracle=ORACLES["q_mutual_information"])
 def q_streaming_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming mutual-information twin: the (type, hour, count) cell
     grid IS the streaming state — commutative counts over the bounded
@@ -1706,47 +1338,22 @@ def q_streaming_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared mi_tail: a LIVE dependence monitor (is the
     type mix decoupling from time-of-day — a bot signature) per
     trigger. Hash-matches the identical batch oracle."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import mi_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     cells = sdf.groupBy(
         F.col("event_type").alias("x"), F.hour("ts").alias("y")
     ).agg(F.count(F.lit(1)).alias("nxy"))
     drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    return mi_tail(drained)
+    return relext.mi_tail(drained)
 
 
-def _jsd_oracle() -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_js_divergence"]
-
-
-@query("q_streaming_jsd", oracle=_jsd_oracle())
+@query("q_streaming_jsd", oracle=ORACLES["q_js_divergence"])
 def q_streaming_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Jensen-Shannon twin: the (lang, len-bucket, count)
     state — lang×16 commutative cells — drained through the shared
     jsd_tail: live per-language drift vs the whole corpus as a crawl
     ingests, beside the KS and Wasserstein twins (one bounded-state
     pattern, three drift metrics). Hash-matches the batch oracle."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_llmdata import jsd_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "documents")
     tok = sdf.select(
         "lang", F.explode(F.split("text", " ")).alias("word")
     ).where(F.length("word") > 0).select(
@@ -1754,33 +1361,17 @@ def q_streaming_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     p = tok.groupBy("lang", "len").agg(F.count(F.lit(1)).alias("np"))
     drained, _ = run_stream_to_memory(p, output_mode="complete")
-    return jsd_tail(drained)
+    return llmdata.jsd_tail(drained)
 
 
-def _audience_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_audience_overlap"]
-
-
-@query("q_streaming_audience", oracle=_audience_oracle())
+@query("q_streaming_audience", oracle=ORACLES["q_audience_overlap"])
 def q_streaming_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming audience-overlap twin: per-(user, day) event-type SETS
     as streaming state (collect_set is order-insensitive and
     idempotent under replay — the set, sorted, is the value), drained
     through the shared audience_tail: the live UpSet panel. State is
     user-day bounded with ≤|types| elements per row."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import audience_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     u = sdf.groupBy(
         "user_id",
         F.floor(F.unix_timestamp(F.date_trunc("day", F.col("ts"))) / 86400).cast("long").alias("day"),
@@ -1789,17 +1380,10 @@ def q_streaming_audience(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.collect_set("event_type")).alias("n_types"),
     )
     drained, _ = run_stream_to_memory(u, output_mode="complete")
-    return audience_tail(drained)
+    return relext.audience_tail(drained)
 
 
-def _srm_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_srm_check"]
-
-
-@query("q_streaming_srm", oracle=_srm_oracle())
+@query("q_streaming_srm", oracle=ORACLES["q_srm_check"])
 def q_streaming_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SRM twin (N99b): the (day, user) presence set IS the
     streaming state — the same distinct any streaming-DAU pipeline keeps,
@@ -1809,16 +1393,7 @@ def q_streaming_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared srm_tail, hash-matching the identical batch oracle: the
     live assignment-health monitor that must trip BEFORE anyone reads
     the q_streaming_ab panel it guards."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import srm_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     # raw readStream yields TIMESTAMP_NTZ; cast pins it to the session's
     # UTC so unix_millis is legal (the memory-sink cast idiom above)
     du = sdf.groupBy(
@@ -1826,17 +1401,10 @@ def q_streaming_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id"),
     ).agg(F.count(F.lit(1)).alias("n"))
     drained, _ = run_stream_to_memory(du, output_mode="complete")
-    return srm_tail(drained.select("day", "user_id"))
+    return relext.srm_tail(drained.select("day", "user_id"))
 
 
-def _kmv_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_kmv_sketch"]
-
-
-@query("q_streaming_kmv", oracle=_kmv_oracle())
+@query("q_streaming_kmv", oracle=ORACLES["q_kmv_sketch"])
 def q_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming KMV twin (N98b): the (event_type, user) presence set is
     the state — same bound as the batch distinct (and as the
@@ -1848,29 +1416,13 @@ def q_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandasWithState keeping 64 longs/group); the presence-set
     state here trades that for exactness of the paired batch contract —
     the estimate, either way, is the same 64 hashes."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import kmv_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     d = sdf.groupBy("event_type", "user_id").agg(F.count(F.lit(1)).alias("n"))
     drained, _ = run_stream_to_memory(d, output_mode="complete")
-    return kmv_tail(drained.select("event_type", "user_id"))
+    return relext.kmv_tail(drained.select("event_type", "user_id"))
 
 
-def _holt_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_holt_linear"]
-
-
-@query("q_streaming_holt", oracle=_holt_oracle())
+@query("q_streaming_holt", oracle=ORACLES["q_holt_linear"])
 def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Holt twin (N101b): the (event_type, day, cents) daily
     table lives in streaming state — commutative integer sums, bounded at
@@ -1879,32 +1431,10 @@ def q_streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     table via the shared holt_tail, hash-matching the batch oracle. The
     live forecast refreshes per trigger; the sequential recursion itself
     never needs to be incremental because its input is days-bounded."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import holt_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        "event_type",
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return holt_tail(drained)
+    return relext.holt_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-def _seasonal_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_seasonal_decompose"]
-
-
-@query("q_streaming_seasonal", oracle=_seasonal_oracle())
+@query("q_streaming_seasonal", oracle=ORACLES["q_seasonal_decompose"])
 def q_streaming_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming seasonal-decomposition twin (N100b): the (day, cents)
     daily state — one integer row per day forever — drained through the
@@ -1914,68 +1444,22 @@ def q_streaming_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     only final 3 days behind the watermark — the same caveat the batch
     docstring's truncation note pins); everything is integer arithmetic,
     so a replay can never drift."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import seasonal_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return seasonal_tail(drained)
+    return relext.seasonal_tail(_streaming_daily_total(spark, sf_dir))
 
 
-def _ccf_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_ccf_leadlag"]
-
-
-@query("q_streaming_ccf", oracle=_ccf_oracle())
+@query("q_streaming_ccf", oracle=ORACLES["q_ccf_leadlag"])
 def q_streaming_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming lead-lag CCF twin (N108b): the view/purchase daily-cents
-    table is the state — commutative integer sums bounded at 2 x days
-    rows forever (the q_streaming_acf bound) — and the 15-lag moment
+    """Streaming lead-lag CCF twin (N108b): the per-type daily-cents
+    state, filtered to the view/purchase pair at drain time — commutative
+    integer sums bounded at types x days rows forever — and the 15-lag moment
     correlation runs at drain time through the shared ccf_tail,
     hash-matching the batch oracle. A live which-moves-first monitor:
     each trigger refreshes the lag profile as new days accumulate."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import ccf_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = (
-        sdf.where(F.col("event_type").isin("view", "purchase"))
-        .groupBy(
-            "event_type",
-            F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
-        )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    )
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return ccf_tail(drained)
+    daily = _streaming_daily_by_type(spark, sf_dir).where(F.col("event_type").isin("view", "purchase"))
+    return relext.ccf_tail(daily)
 
 
-def _growth_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_growth_accounting"]
-
-
-@query("q_streaming_growth", oracle=_growth_oracle())
+@query("q_streaming_growth", oracle=ORACLES["q_growth_accounting"])
 def q_streaming_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming growth-accounting twin (N112b): the (user_id, week)
     presence set as state — idempotent and order-proof (the
@@ -1984,32 +1468,16 @@ def q_streaming_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-matches the batch oracle. The trailing week is non-final until
     the week closes (its churn row needs week+1 evidence) — the same
     horizon caveat the batch docstring clips."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import growth_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "events")
     uw = sdf.groupBy(
         "user_id",
         F.expr("unix_millis(cast(ts as timestamp)) div 604800000").alias("week"),
     ).agg(F.count(F.lit(1)).alias("n"))
     drained, _ = run_stream_to_memory(uw, output_mode="complete")
-    return growth_tail(drained.select("user_id", "week"))
+    return relext.growth_tail(drained.select("user_id", "week"))
 
 
-def _xmr_oracle() -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES["q_xmr_control"]
-
-
-@query("q_streaming_xmr", oracle=_xmr_oracle())
+@query("q_streaming_xmr", oracle=ORACLES["q_xmr_control"])
 def q_streaming_xmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming XmR control-chart twin (N109b): the per-type daily-cents
     state (commutative integer sums, types x days rows forever) drained
@@ -2017,52 +1485,10 @@ def q_streaming_xmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     tighten as days accumulate, hash-matching the batch oracle. The SPC
     complement to q_streaming_zscore: limits from short-term
     consecutive-day movement, immune to slow drift inflating them."""
-    import os as _os
-
-    from simple_stream_processor_spark.queries_relational_ext import xmr_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        "event_type",
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return xmr_tail(drained)
+    return relext.xmr_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-def _relext_oracle(name: str) -> str:
-    from simple_stream_processor_spark import queries_relational_ext  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES[name]
-
-
-def _streaming_daily_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (event_type, day, cents) daily table as streaming state —
-    commutative integer sums bounded at types x days rows forever — drained
-    complete; the shared head of the trend/dispersion streaming twins."""
-    import os as _os
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        "event_type",
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return drained
-
-
-@query("q_streaming_mann_kendall", oracle=_relext_oracle("q_mann_kendall"))
+@query("q_streaming_mann_kendall", oracle=ORACLES["q_mann_kendall"])
 def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Mann-Kendall twin (N106b): the per-type daily-cents state
     drained through the shared mann_kendall_tail — a live is-the-trend-real
@@ -2070,144 +1496,87 @@ def q_streaming_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes over the days-bounded state at drain time; it never needs to
     be incremental because its input is bounded, the q_streaming_acf
     argument."""
-    from simple_stream_processor_spark.queries_relational_ext import mann_kendall_tail
-
-    return mann_kendall_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.mann_kendall_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_runs", oracle=_relext_oracle("q_runs_test"))
+@query("q_streaming_runs", oracle=ORACLES["q_runs_test"])
 def q_streaming_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming runs-test twin (N107b): daily-cents state through the
     shared runs_test_tail — live randomness audit of the day-over-day sign
     sequence (momentum and oscillation regressions surface per trigger),
     hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import runs_test_tail
-
-    return runs_test_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.runs_test_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_welch", oracle=_relext_oracle("q_welch_ttest"))
+@query("q_streaming_welch", oracle=ORACLES["q_welch_ttest"])
 def q_streaming_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Welch twin (N116b): daily-cents state through the shared
     welch_tail — the weekend effect monitored live with exact moments,
     hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import welch_tail
-
-    return welch_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.welch_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
 
-@query("q_streaming_drawdown", oracle=_relext_oracle("q_max_drawdown"))
+@query("q_streaming_drawdown", oracle=ORACLES["q_max_drawdown"])
 def q_streaming_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming max-drawdown twin (N118b): per-type daily-cents state
     through the shared max_drawdown_tail — the worst peak-to-trough slide
     re-evaluated per trigger (a live revenue-at-risk monitor), hash-matching
     the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import max_drawdown_tail
-
-    return max_drawdown_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.max_drawdown_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-def _streaming_daily_global(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The global (day, cents) daily table as streaming state — one integer
-    row per day forever (the q_streaming_seasonal bound), drained complete."""
-    import os as _os
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    daily = sdf.groupBy(
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return drained
-
-
-@query("q_streaming_strength", oracle=_relext_oracle("q_seasonality_strength"))
+@query("q_streaming_strength", oracle=ORACLES["q_seasonality_strength"])
 def q_streaming_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming seasonality-strength twin (N119b): the (day, cents) state
     through seasonality_strength_tail — the F_T/F_S scorecard refreshed per
     trigger (trailing 3 days non-final behind the watermark, the
     q_streaming_seasonal caveat), hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import (
-        seasonality_strength_tail,
-    )
-
-    return seasonality_strength_tail(_streaming_daily_global(spark, sf_dir))
+    return relext.seasonality_strength_tail(_streaming_daily_total(spark, sf_dir))
 
 
-@query("q_streaming_seasonal_anomaly", oracle=_relext_oracle("q_seasonal_anomaly"))
+@query("q_streaming_seasonal_anomaly", oracle=ORACLES["q_seasonal_anomaly"])
 def q_streaming_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming seasonal-anomaly twin (N121b): the (day, cents) state
     through seasonal_anomaly_tail — the live top-10 residual-outlier panel
     (a weekly peak still not an anomaly, a drift still unable to inflate
     MAD), hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import seasonal_anomaly_tail
-
-    return seasonal_anomaly_tail(_streaming_daily_global(spark, sf_dir))
+    return relext.seasonal_anomaly_tail(_streaming_daily_total(spark, sf_dir))
 
 
-def _streaming_user_rollup(spark: SparkSession, sf_dir: str, *aggs):
-    """A per-user streaming rollup drained complete — one state row per user
-    forever (the q_streaming_ab bound); the shared head of the user-keyed
-    experiment/survival twins."""
-    import os as _os
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    u = sdf.groupBy("user_id").agg(*aggs)
-    drained, _ = run_stream_to_memory(u, output_mode="complete")
-    return drained
-
-
-@query("q_streaming_nelson_aalen", oracle=_relext_oracle("q_nelson_aalen"))
+@query("q_streaming_nelson_aalen", oracle=ORACLES["q_nelson_aalen"])
 def q_streaming_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Nelson-Aalen twin (N115b): per-user first/last timestamps
     as state (min/max — commutative, replay-idempotent; the
     q_streaming_survival bound) drained through the shared na_curve —
     the live cumulative-hazard curve beside the KM twin, hash-matching
     the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import na_curve
-
-    drained = _streaming_user_rollup(
-        spark, sf_dir, F.min("ts").alias("f"), F.max("ts").alias("l")
-    )
-    return na_curve(drained)
+    drained = _streaming_user_rollup(spark, sf_dir, F.min("ts").alias("f"), F.max("ts").alias("l"))
+    return relext.na_curve(drained)
 
 
-@query("q_streaming_qini", oracle=_relext_oracle("q_qini_curve"))
+@query("q_streaming_qini", oracle=ORACLES["q_qini_curve"])
 def q_streaming_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Qini twin (N127b): the per-user (n_events, n_purchase)
     state — exactly the q_streaming_ab state — drained through the shared
     qini_tail, so the live uplift-by-decile panel hash-matches the batch
     oracle; arms and deciles re-derive at drain (pure functions of the
     state)."""
-    from simple_stream_processor_spark.queries_relational_ext import qini_tail
-
     drained = _streaming_user_rollup(
         spark,
         sf_dir,
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("n_purchase"),
     )
-    return qini_tail(drained)
+    return relext.qini_tail(drained)
 
 
-@query("q_streaming_shapley", oracle=_relext_oracle("q_shapley_attribution"))
+@query("q_streaming_shapley", oracle=ORACLES["q_shapley_attribution"])
 def q_streaming_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Shapley twin (N130b): per-user event-type counts as state
     (5 integers per user forever), drained through the shared shapley_tail
     — live channel attribution whose efficiency axiom still holds at every
     trigger, hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import shapley_tail
-
     drained = _streaming_user_rollup(
         spark,
         sf_dir,
@@ -2217,17 +1586,15 @@ def q_streaming_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in ("click", "view", "signup", "purchase")
         ],
     )
-    return shapley_tail(drained)
+    return relext.shapley_tail(drained)
 
 
-@query("q_streaming_bootstrap", oracle=_relext_oracle("q_bootstrap_ci"))
+@query("q_streaming_bootstrap", oracle=ORACLES["q_bootstrap_ci"])
 def q_streaming_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming bootstrap twin (N129b): per-user purchase cents as state,
     drained through the shared bootstrap_tail — the Poisson-bootstrap CI
     refreshed per trigger (weights re-derive from the hash, so replays and
     arrival order are invisible), hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import bootstrap_tail
-
     drained = _streaming_user_rollup(
         spark,
         sf_dir,
@@ -2237,142 +1604,87 @@ def q_streaming_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(0))
         ).alias("cents"),
     )
-    return bootstrap_tail(drained)
+    return relext.bootstrap_tail(drained)
 
 
-@query("q_streaming_mann_whitney", oracle=_relext_oracle("q_mann_whitney"))
+@query("q_streaming_mann_whitney", oracle=ORACLES["q_mann_whitney"])
 def q_streaming_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Mann-Whitney twin (N131b): the per-type daily-cents state
     through the shared mann_whitney_tail — the nonparametric weekend-shift
     verdict live beside the Welch twin, hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import mann_whitney_tail
+    return relext.mann_whitney_tail(_streaming_daily_by_type(spark, sf_dir))
 
-    return mann_whitney_tail(_streaming_daily_by_type(spark, sf_dir))
 
-@query("q_streaming_kendall", oracle=_relext_oracle("q_kendall_tau"))
+@query("q_streaming_kendall", oracle=ORACLES["q_kendall_tau"])
 def q_streaming_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Kendall tau-b twin (N136b): the per-type daily-cents
     state (filtered to the view/purchase pair) through the shared
     kendall_tau_tail — live rank-concordance between traffic and revenue,
     hash-matching the batch oracle. The pair statistic recomputes over the
     days-bounded state at drain time (the q_streaming_acf argument)."""
-    from simple_stream_processor_spark.queries_relational_ext import kendall_tau_tail
-
     daily = _streaming_daily_by_type(spark, sf_dir).where(
         F.col("event_type").isin("view", "purchase")
     )
-    return kendall_tau_tail(daily)
+    return relext.kendall_tau_tail(daily)
 
 
-@query("q_streaming_pettitt", oracle=_relext_oracle("q_pettitt_changepoint"))
+@query("q_streaming_pettitt", oracle=ORACLES["q_pettitt_changepoint"])
 def q_streaming_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Pettitt twin (N139b): daily-cents state through the
     shared pettitt_tail — a live where-did-the-level-shift monitor whose
     most-probable change day hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import pettitt_tail
-
-    return pettitt_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.pettitt_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_kruskal", oracle=_relext_oracle("q_kruskal_wallis"))
+@query("q_streaming_kruskal", oracle=ORACLES["q_kruskal_wallis"])
 def q_streaming_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Kruskal-Wallis twin (N137b): daily-cents state through
     the shared kruskal_tail — the live are-the-types-one-distribution
     verdict, hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import kruskal_tail
-
-    return kruskal_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.kruskal_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_anova", oracle=_relext_oracle("q_anova"))
+@query("q_streaming_anova", oracle=ORACLES["q_anova"])
 def q_streaming_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANOVA twin (N140b): daily-cents state through the shared
     anova_tail — live F/eta^2 across event types, hash-matching the batch
     oracle; the mean-axis companion to the Kruskal twin."""
-    from simple_stream_processor_spark.queries_relational_ext import anova_tail
-
-    return anova_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.anova_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_tukey", oracle=_relext_oracle("q_tukey_fences"))
+@query("q_streaming_tukey", oracle=ORACLES["q_tukey_fences"])
 def q_streaming_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Tukey-fences twin (N141b): daily-cents state through the
     shared tukey_tail — live IQR-fence outlier counts per type,
     hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import tukey_tail
-
-    return tukey_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.tukey_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-def _streaming_hour_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (event_type, hr, obs) contingency-cell table as streaming
-    state — commutative counts bounded at types x 24 rows forever —
-    drained complete; the head of the Cramer's-V twin."""
-    import os as _os
-
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    cells = sdf.groupBy(
-        "event_type",
-        F.hour(F.col("ts").cast("timestamp")).cast("long").alias("hr"),
-    ).agg(F.count(F.lit(1)).alias("obs"))
-    drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    return drained
-
-
-@query("q_streaming_cramers", oracle=_relext_oracle("q_cramers_v"))
+@query("q_streaming_cramers", oracle=ORACLES["q_cramers_v"])
 def q_streaming_cramers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Cramer's-V twin (N138b): the types x 24 contingency-cell
     count state through the shared cramers_tail — the live
     association-strength drift number, hash-matching the batch oracle.
     Counts are commutative, so arrival order and micro-batch boundaries
     cannot change the drained table."""
-    from simple_stream_processor_spark.queries_relational_ext import cramers_tail
+    cells = stream_table(spark, sf_dir, "events").groupBy(
+        "event_type", F.hour(F.col("ts").cast("timestamp")).cast("long").alias("hr")
+    ).agg(F.count(F.lit(1)).alias("obs"))
+    drained, _ = run_stream_to_memory(cells, output_mode="complete")
+    return relext.cramers_tail(drained)
 
-    return cramers_tail(_streaming_hour_counts(spark, sf_dir))
 
-@query("q_streaming_holt_winters", oracle=_relext_oracle("q_holt_winters"))
+@query("q_streaming_holt_winters", oracle=ORACLES["q_holt_winters"])
 def q_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Holt-Winters twin (N147b): the per-type daily-cents
     state through the shared holt_winters_tail — a live
     level/trend/seasonal forecast panel whose numbers hash-match the
     batch oracle; the bounded-state-then-fold argument of the Holt and
     seasonal twins extended to the triple-smoothing state."""
-    from simple_stream_processor_spark.queries_relational_ext import holt_winters_tail
-
-    return holt_winters_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.holt_winters_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-def _streaming_docs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The raw documents table drained through a memory sink (append) —
-    the head of doc-payload twins whose per-doc outputs need the full
-    text (multimodal codecs): each doc is one immutable row, so append
-    mode needs no state at all; the twin proves the codec path runs
-    incrementally per micro-batch."""
-    import os as _os
-
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    drained, _ = run_stream_to_memory(sdf, output_mode="append")
-    return drained
-
-
-def _llmdata_oracle(name: str) -> str:
-    from simple_stream_processor_spark import queries_llmdata  # noqa: F401  (registers the batch oracle)
-    from simple_stream_processor_spark.registry import ORACLES
-
-    return ORACLES[name]
-
-
-@query("q_streaming_loudness", oracle=_llmdata_oracle("q_audio_loudness"))
+@query("q_streaming_loudness", oracle=ORACLES["q_audio_loudness"])
 def q_streaming_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming audio-loudness twin (L94b): documents ingest as a
     stream, synthesize their WAV payloads and run the REAL RIFF walk per
@@ -2381,9 +1693,7 @@ def q_streaming_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch oracle. The continuous-ingest version of the audio quality
     gate: clipping and silence surface as clips arrive, not at batch
     close."""
-    from simple_stream_processor_spark.operators import multimodal
-
-    docs = _streaming_docs_raw(spark, sf_dir)
+    docs, _ = run_stream_to_memory(stream_table(spark, sf_dir, "documents"), output_mode="append")
     wav = multimodal.text_to_wav(docs, sample_rate=8000, max_samples=256)
     st = multimodal.loudness_audio(wav).where(F.col("decode_ok"))
     rms = F.sqrt(F.col("sumsq") / F.col("n_samples"))
@@ -2399,88 +1709,63 @@ def q_streaming_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.try_divide(F.col("peak"), rms), 4).alias("crest_factor"),
     )
 
-@query("q_streaming_sax", oracle=_relext_oracle("q_sax_words"))
+
+@query("q_streaming_sax", oracle=ORACLES["q_sax_words"])
 def q_streaming_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming SAX twin (N148b): the per-type daily-cents state through
     the shared sax_tail — each trigger re-symbolizes the bounded series,
     so the live panel always shows the CURRENT word; hash-matches the
     batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import sax_tail
-
-    return sax_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.sax_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-# ---------------------------------------------------------------------------
-# Round 8 twins: PSI / Gopher / mojibake / kappa over a document stream,
-# HHI+Theil over an order stream, McNemar / Brown-Forsythe / OHLC /
-# Page-Hinkley / DTW over the event stream.
-# ---------------------------------------------------------------------------
-
-
-def _stream_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw_schema = stream_schema(spark, sf_dir, "documents")
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
-@query("q_streaming_psi", oracle=_llmdata_oracle("q_psi_drift"))
+@query("q_streaming_psi", oracle=ORACLES["q_psi_drift"])
 def q_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PSI twin (L97b): the (source, length-bin, count) cell
     state — sources x 16 commutative rows — drained through the shared
     psi_tail: the FOURTH live drift metric on the one bounded-state
     pattern (KS max-gap, W1 transport, JSD symmetric-info, PSI banded
     verdicts). Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import psi_tail
-
-    sdf = _stream_docs(spark, sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     cells = sdf.groupBy(
         "source", F.least(F.lit(15), F.expr("n_chars div 64")).alias("bin")
     ).agg(F.count(F.lit(1)).alias("np"))
     drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    return psi_tail(drained)
+    return llmdata.psi_tail(drained)
 
 
-@query("q_streaming_gopher", oracle=_llmdata_oracle("q_gopher_rules"))
+@query("q_streaming_gopher", oracle=ORACLES["q_gopher_rules"])
 def q_streaming_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Gopher twin (L99b): per-doc rule flags are pure
     functions, so the per-source counter table IS the streaming state
     (commutative sums, sources-bounded); drained counters flow through
     the shared gopher_tail — a live rule-level quality gate on a crawl,
     hash-matching the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import gopher_counts, gopher_tail
-
-    g = gopher_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.gopher_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return gopher_tail(drained)
+    return llmdata.gopher_tail(drained)
 
 
-@query("q_streaming_mojibake", oracle=_llmdata_oracle("q_mojibake_audit"))
+@query("q_streaming_mojibake", oracle=ORACLES["q_mojibake_audit"])
 def q_streaming_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming mojibake twin (L100b): the per-source encoding-corruption
     counters as commutative streaming state through the shared
     mojibake_tail — broken decodes surface as the crawl ingests, not at
     the next batch audit. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import mojibake_counts, mojibake_tail
-
-    g = mojibake_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.mojibake_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return mojibake_tail(drained)
+    return llmdata.mojibake_tail(drained)
 
 
-@query("q_streaming_kappa", oracle=_llmdata_oracle("q_cohens_kappa"))
+@query("q_streaming_kappa", oracle=ORACLES["q_cohens_kappa"])
 def q_streaming_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming kappa twin (L98b): the (lang, a, b, c, d) agreement
     cells as commutative streaming state through the shared kappa_tail —
     live rater-drift monitoring (a quality-model regression shows up as
     kappa sliding, per trigger). Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import kappa_counts, kappa_tail
-
-    g = kappa_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.kappa_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return kappa_tail(drained)
+    return llmdata.kappa_tail(drained)
 
 
 def _streaming_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2489,12 +1774,7 @@ def _streaming_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_streaming_enrich join shape): commutative integer sums bounded at
     segments x customers rows; the shared head of the concentration/
     inequality twins (N149b HHI, N150b Theil)."""
-    raw_schema = stream_schema(spark, sf_dir, "orders")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "orders")
     cust = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("ck"), F.col("c_mktsegment").alias("segment")
     )
@@ -2507,59 +1787,45 @@ def _streaming_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drained
 
 
-@query("q_streaming_hhi", oracle=_relext_oracle("q_hhi_concentration"))
+@query("q_streaming_hhi", oracle=ORACLES["q_hhi_concentration"])
 def q_streaming_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming HHI twin (N149b): the per-customer revenue state drained
     through the shared hhi_tail — live concentration monitoring (a whale
     customer emerging mid-day moves the index per trigger).
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import hhi_tail
-
-    return hhi_tail(_streaming_customer_revenue(spark, sf_dir))
+    return relext.hhi_tail(_streaming_customer_revenue(spark, sf_dir))
 
 
-@query("q_streaming_theil", oracle=_relext_oracle("q_theil_index"))
+@query("q_streaming_theil", oracle=ORACLES["q_theil_index"])
 def q_streaming_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Theil twin (N150b): the SAME revenue state as N149b
     drained through theil_tail — one bounded state table serves both
     concentration readouts (HHI points + decomposable Theil), the
     KS/W1/JSD/PSI multi-metric pattern on the revenue axis.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import theil_tail
-
-    return theil_tail(_streaming_customer_revenue(spark, sf_dir))
+    return relext.theil_tail(_streaming_customer_revenue(spark, sf_dir))
 
 
-@query("q_streaming_mcnemar", oracle=_relext_oracle("q_mcnemar"))
+@query("q_streaming_mcnemar", oracle=ORACLES["q_mcnemar"])
 def q_streaming_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming McNemar twin (N151b): the (event_type, user, day)
     presence state — counts commutative, bounded by active user-days
     (the q_streaming_saturation precedent) — drained through the shared
     mcnemar_tail; the half-period boundary re-derives from the state's
     own min/max day each trigger. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import mcnemar_tail
-
-    sdf = stream_events(spark, sf_dir)
-    pres = sdf.groupBy(
-        "event_type", "user_id",
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    drained, _ = run_stream_to_memory(pres, output_mode="complete")
-    return mcnemar_tail(drained)
+    return relext.mcnemar_tail(_streaming_presence_state(spark, sf_dir))
 
 
-@query("q_streaming_brown_forsythe", oracle=_relext_oracle("q_brown_forsythe"))
+@query("q_streaming_brown_forsythe", oracle=ORACLES["q_brown_forsythe"])
 def q_streaming_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Brown-Forsythe twin (N152b): the per-type daily-cents
     state through the shared brown_forsythe_tail — a live dispersion-
     homogeneity monitor beside the streaming ANOVA twin (means) on the
     same state table. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import brown_forsythe_tail
-
-    return brown_forsythe_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.brown_forsythe_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_ohlc", oracle=_relext_oracle("q_ohlc_bars"))
+@query("q_streaming_ohlc", oracle=ORACLES["q_ohlc_bars"])
 def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming OHLC twin (N153b): candlestick bars on the PRODUCTION
     stateful path — ``applyInPandasWithState`` keeps ONE fixed-width bar
@@ -2572,19 +1838,13 @@ def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     The transformWithStateInPandas port of the same state machine ships
     container-gated in streaming/ohlc.py (google.protobuf absent here).
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.streaming.ohlc import (
-        ohlc_bars_stateful,
-        ohlc_latest_bars,
-        prepare_ohlc_events,
-    )
-
     sdf = stream_events(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
     bars = ohlc_bars_stateful(prepare_ohlc_events(sdf))
     drained, _ = run_stream_to_memory(bars, output_mode="update")
     return ohlc_latest_bars(drained)
 
 
-@query("q_streaming_page_hinkley", oracle=_relext_oracle("q_page_hinkley"))
+@query("q_streaming_page_hinkley", oracle=ORACLES["q_page_hinkley"])
 def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Page-Hinkley twin (N154b): the (day, cents) daily-total
     state — days-bounded commutative sums — re-folded through the shared
@@ -2592,102 +1852,62 @@ def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector only raises at the next scheduled run. The sequential fold
     runs over bounded state at drain time, never over the stream (the
     q_streaming_acf argument). Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import page_hinkley_tail
-
-    sdf = stream_events(spark, sf_dir)
-    daily = sdf.groupBy(
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return page_hinkley_tail(drained)
+    return relext.page_hinkley_tail(_streaming_daily_total(spark, sf_dir))
 
 
-@query("q_streaming_dtw", oracle=_relext_oracle("q_dtw_distance"))
+@query("q_streaming_dtw", oracle=ORACLES["q_dtw_distance"])
 def q_streaming_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DTW twin (N159b): the (event_type, hour-of-day, cents)
     profile state — types x 24 commutative cells — re-warped through the
     shared dtw_tail each trigger: a live phase-alignment monitor between
     traffic and conversion profiles. The all-integer DP runs over the
     bounded state at drain time. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import dtw_tail
-
     sdf = stream_events(spark, sf_dir)
     hourly = sdf.groupBy(
         "event_type",
         F.expr("(unix_millis(cast(ts as timestamp)) div 3600000) % 24").alias("hour"),
     ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
     drained, _ = run_stream_to_memory(hourly, output_mode="complete")
-    return dtw_tail(drained)
+    return relext.dtw_tail(drained)
 
 
-# ---------------------------------------------------------------------------
-# Round 8 wave-2 twins: Cochran, Fleiss, Hurst, Croston, Weibull, log-rank.
-# ---------------------------------------------------------------------------
-
-
-def _streaming_presence_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (event_type, user_id, day) presence state — counts commutative,
-    bounded by active user-days — shared by the paired/repeated-measures
-    twins (N151b McNemar, N162b Cochran)."""
-    sdf = stream_events(spark, sf_dir)
-    pres = sdf.groupBy(
-        "event_type", "user_id",
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    drained, _ = run_stream_to_memory(pres, output_mode="complete")
-    return drained
-
-
-@query("q_streaming_cochran", oracle=_relext_oracle("q_cochran_q"))
+@query("q_streaming_cochran", oracle=ORACLES["q_cochran_q"])
 def q_streaming_cochran(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Cochran twin (N162b): the SAME presence state as the
     McNemar twin drained through cochran_tail — one bounded state table
     serves both the paired 2-period and the repeated-measures 3-period
     shift tests (the multi-metric-per-state pattern). Hash-matches the
     batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import cochran_tail
-
-    return cochran_tail(_streaming_presence_state(spark, sf_dir))
+    return relext.cochran_tail(_streaming_presence_state(spark, sf_dir))
 
 
-@query("q_streaming_fleiss", oracle=_llmdata_oracle("q_fleiss_kappa"))
+@query("q_streaming_fleiss", oracle=ORACLES["q_fleiss_kappa"])
 def q_streaming_fleiss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Fleiss twin (L104b): the (lang, n, sum_pos, sum_pnum)
     counter state — per-doc pure rater flags into commutative sums —
     through the shared fleiss_tail: live multi-rater drift monitoring.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import fleiss_counts, fleiss_tail
-
-    g = fleiss_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.fleiss_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return fleiss_tail(drained)
+    return llmdata.fleiss_tail(drained)
 
 
-@query("q_streaming_hurst", oracle=_relext_oracle("q_hurst_exponent"))
+@query("q_streaming_hurst", oracle=ORACLES["q_hurst_exponent"])
 def q_streaming_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Hurst twin (N164b): the (day, cents) daily-total state
     re-analyzed through hurst_tail per trigger — live long-memory
     diagnosis of the revenue series; the R/S block scan runs over
     days-bounded state at drain time. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import hurst_tail
-
-    sdf = stream_events(spark, sf_dir)
-    daily = sdf.groupBy(
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return hurst_tail(drained)
+    return relext.hurst_tail(_streaming_daily_total(spark, sf_dir))
 
 
-@query("q_streaming_croston", oracle=_relext_oracle("q_croston"))
+@query("q_streaming_croston", oracle=ORACLES["q_croston"])
 def q_streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Croston twin (N166b): the per-type daily-cents state
     through croston_tail — the live intermittent-demand forecast, dense
     spine and sequential fold re-run over bounded state at drain time.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import croston_tail
-
-    return croston_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.croston_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
 def _streaming_user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2708,14 +1928,12 @@ def _streaming_user_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drained
 
 
-@query("q_streaming_logrank", oracle=_relext_oracle("q_logrank_test"))
+@query("q_streaming_logrank", oracle=ORACLES["q_logrank_test"])
 def q_streaming_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming log-rank twin (N161b): the per-user survival state —
     commutative min/max aggregates, one row per user — drained through
     the shared logrank_tail: a live is-the-cohort-separation-real
     monitor. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import logrank_tail
-
     st = _streaming_user_survival(spark, sf_dir)
     users = st.select(
         "user_id",
@@ -2724,69 +1942,51 @@ def q_streaming_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("dlast") - F.col("d0")).alias("t"),
         F.when(F.col("dp").isNotNull(), 1).otherwise(0).alias("ev"),
     )
-    return logrank_tail(users)
+    return relext.logrank_tail(users)
 
 
-@query("q_streaming_weibull", oracle=_relext_oracle("q_weibull_fit"))
+@query("q_streaming_weibull", oracle=ORACLES["q_weibull_fit"])
 def q_streaming_weibull(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Weibull twin (N165b): the SAME per-user survival state
     as the log-rank twin through weibull_tail — one user-bounded state,
     two survival readouts (nonparametric test + parametric fit).
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import weibull_tail
-
     st = _streaming_user_survival(spark, sf_dir)
     users = st.select(
         "user_id",
         (F.coalesce(F.col("dp"), F.col("d0")) - F.col("d0") + 1).alias("t"),
         F.when(F.col("dp").isNotNull(), 1).otherwise(0).alias("ev"),
     )
-    return weibull_tail(users)
+    return relext.weibull_tail(users)
 
 
-@query("q_streaming_seasonal_mk", oracle=_relext_oracle("q_seasonal_mann_kendall"))
+@query("q_streaming_seasonal_mk", oracle=ORACLES["q_seasonal_mann_kendall"])
 def q_streaming_seasonal_mk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming seasonal-MK twin (N168b): the (day, cents) daily-total
     state re-stratified through seasonal_mk_tail per trigger — the live
     deseasonalized trend verdict beside the plain streaming MK twin on
     the per-type state. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import seasonal_mk_tail
-
-    sdf = stream_events(spark, sf_dir)
-    daily = sdf.groupBy(
-        F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-    drained, _ = run_stream_to_memory(daily, output_mode="complete")
-    return seasonal_mk_tail(drained)
+    return relext.seasonal_mk_tail(_streaming_daily_total(spark, sf_dir))
 
 
-@query("q_streaming_code_switch", oracle=_llmdata_oracle("q_code_switch_audit"))
+@query("q_streaming_code_switch", oracle=ORACLES["q_code_switch_audit"])
 def q_streaming_code_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming code-switch twin (L108b): per-source mixed/unidentified
     counters as commutative streaming state through code_switch_tail —
     mixed-language crawl segments surface as they ingest. Hash-matches
     the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import code_switch_counts, code_switch_tail
-
-    g = code_switch_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.code_switch_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return code_switch_tail(drained)
+    return llmdata.code_switch_tail(drained)
 
 
-@query("q_streaming_price_index", oracle=_relext_oracle("q_price_index"))
+@query("q_streaming_price_index", oracle=ORACLES["q_price_index"])
 def q_streaming_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming price-index twin (N163b): the (part, month, qty, cents)
     state over a LINEITEM stream — the first fact-table stream twin —
     drained through price_index_tail: live Laspeyres/Paasche/Fisher
     readouts as shipments ingest. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import price_index_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "lineitem")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "lineitem")
     pm = (
         sdf.groupBy(
             F.col("l_partkey").alias("partkey"),
@@ -2799,24 +1999,17 @@ def q_streaming_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     drained, _ = run_stream_to_memory(pm, output_mode="complete")
-    return price_index_tail(drained.where(F.col("qty") > 0))
+    return relext.price_index_tail(drained.where(F.col("qty") > 0))
 
 
-@query("q_streaming_abc_xyz", oracle=_relext_oracle("q_abc_xyz_matrix"))
+@query("q_streaming_abc_xyz", oracle=ORACLES["q_abc_xyz_matrix"])
 def q_streaming_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ABC-XYZ twin (N167b): the (part, week, qty, cents) state
     over the lineitem stream — ONE part-week-bounded commutative state
     drained through abc_xyz_tail serves BOTH classifications (revenue
     Pareto + demand variability): the live stocking-policy grid.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import abc_xyz_tail
-
-    raw_schema = stream_schema(spark, sf_dir, "lineitem")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "lineitem")
     pw = sdf.groupBy(
         F.col("l_partkey").alias("partkey"),
         F.expr("unix_millis(cast(l_shipdate as timestamp)) div 604800000").alias("week"),
@@ -2825,46 +2018,40 @@ def q_streaming_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long")).alias("cents"),
     )
     drained, _ = run_stream_to_memory(pw, output_mode="complete")
-    return abc_xyz_tail(drained)
+    return relext.abc_xyz_tail(drained)
 
 
-@query("q_streaming_poisson_rate", oracle=_relext_oracle("q_poisson_rate_test"))
+@query("q_streaming_poisson_rate", oracle=ORACLES["q_poisson_rate_test"])
 def q_streaming_poisson_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Poisson-rate twin (N169b): the (event_type, day, count)
     state — types x days commutative rows — through poisson_rate_tail:
     the live volume-shift alarm per type. Hash-matches the batch
     oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import poisson_rate_tail
-
     sdf = stream_events(spark, sf_dir)
     counts = sdf.groupBy(
         "event_type",
         F.expr("unix_millis(cast(ts as timestamp)) div 86400000").alias("day"),
     ).agg(F.count(F.lit(1)).alias("k"))
     drained, _ = run_stream_to_memory(counts, output_mode="complete")
-    return poisson_rate_tail(drained)
+    return relext.poisson_rate_tail(drained)
 
 
-@query("q_streaming_friedman", oracle=_relext_oracle("q_friedman_test"))
+@query("q_streaming_friedman", oracle=ORACLES["q_friedman_test"])
 def q_streaming_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Friedman twin (N170b): the per-type daily-cents state
     through friedman_tail — the live is-the-type-ordering-stable verdict
     beside the streaming Kruskal/ANOVA twins on the same state table.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import friedman_tail
-
-    return friedman_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.friedman_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_keyword_trend", oracle=_llmdata_oracle("q_keyword_trend"))
+@query("q_streaming_keyword_trend", oracle=ORACLES["q_keyword_trend"])
 def q_streaming_keyword_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming keyword-trend twin (L110b): the (week, word, count)
     state — vocab x buckets commutative cells — through
     keyword_trend_tail: emerging terms surface as the crawl ingests.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import keyword_trend_tail
-
-    sdf = _stream_docs(spark, sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     cells = (
         sdf.select(
             F.expr("doc_id div 64").alias("week"),
@@ -2875,19 +2062,17 @@ def q_streaming_keyword_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    return keyword_trend_tail(drained)
+    return llmdata.keyword_trend_tail(drained)
 
 
-@query("q_streaming_textrank", oracle=_llmdata_oracle("q_textrank_keywords"))
+@query("q_streaming_textrank", oracle=ORACLES["q_textrank_keywords"])
 def q_streaming_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming TextRank twin (L101b): the (w1, w2) adjacency-pair count
     state — vocab^2-bounded commutative cells, arrival-order-proof — with
     the pagerank iterations re-run over the drained graph through
     textrank_tail: live keyword centrality as the crawl ingests.
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import textrank_tail
-
-    sdf = _stream_docs(spark, sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.col("text"), " "), lambda w: F.length(w) > 0)
     t = sdf.select(toks.alias("tk"))
     pairs = t.select(
@@ -2903,19 +2088,17 @@ def q_streaming_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     state = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
     drained, _ = run_stream_to_memory(state, output_mode="complete")
-    return textrank_tail(drained.select("w1", "w2"))
+    return llmdata.textrank_tail(drained.select("w1", "w2"))
 
 
-@query("q_streaming_burrows", oracle=_llmdata_oracle("q_burrows_delta"))
+@query("q_streaming_burrows", oracle=ORACLES["q_burrows_delta"])
 def q_streaming_burrows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Burrows twin (L107b): the (source, word, count)
     vocabulary state — commutative, vocab x sources bounded — through
     burrows_tail: the live stylometric distance matrix (a content farm
     spinning up mid-crawl drifts toward its twin source per trigger).
     Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import burrows_tail
-
-    sdf = _stream_docs(spark, sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     cells = (
         sdf.select("source", F.explode(F.split("text", " ")).alias("w"))
         .where(F.length("w") > 0)
@@ -2923,130 +2106,105 @@ def q_streaming_burrows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     drained, _ = run_stream_to_memory(cells, output_mode="complete")
-    return burrows_tail(drained)
+    return llmdata.burrows_tail(drained)
 
 
-# ---------------------------------------------------------------------------
-# Round 9 twins: Jarque-Bera / Cox-Stuart / Bollinger / Durbin-Watson /
-# RSI / Jonckheere over the event stream's daily state, Flesch + OOV over
-# the document stream's counter states.
-# ---------------------------------------------------------------------------
-
-
-@query("q_streaming_jarque_bera", oracle=_relext_oracle("q_jarque_bera"))
+@query("q_streaming_jarque_bera", oracle=ORACLES["q_jarque_bera"])
 def q_streaming_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Jarque-Bera twin (N171b): the types x days daily-cents
     state through the shared jarque_bera_tail — live normality
     screening of the revenue metric (a fat-tailed regime shows up as
     kurtosis drift per trigger, before control-limit alarms misfire);
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import jarque_bera_tail
-
-    return jarque_bera_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.jarque_bera_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_cox_stuart", oracle=_relext_oracle("q_cox_stuart"))
+@query("q_streaming_cox_stuart", oracle=ORACLES["q_cox_stuart"])
 def q_streaming_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Cox-Stuart twin (N172b): the daily-cents state through
     the shared cox_stuart_tail — each trigger re-pairs the CURRENT
     half-series, so the cheap sign-trend screen stays live as days
     accumulate; hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import cox_stuart_tail
-
-    return cox_stuart_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.cox_stuart_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_bollinger", oracle=_relext_oracle("q_bollinger_bands"))
+@query("q_streaming_bollinger", oracle=ORACLES["q_bollinger_bands"])
 def q_streaming_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Bollinger twin (N173b): the daily-cents state through
     the shared bollinger_tail — the live volatility envelope (today's
     bar re-bands as its revenue accumulates, breach flags stay exact
     integers); hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import bollinger_tail
-
-    return bollinger_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.bollinger_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_durbin_watson", oracle=_relext_oracle("q_durbin_watson"))
+@query("q_streaming_durbin_watson", oracle=ORACLES["q_durbin_watson"])
 def q_streaming_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Durbin-Watson twin (N174b): the daily-cents state
     through the shared durbin_watson_tail — live serial-correlation
     monitoring of the metric the forecast/A-B family assumes
     independent; hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import durbin_watson_tail
-
-    return durbin_watson_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.durbin_watson_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_rsi", oracle=_relext_oracle("q_rsi_cutler"))
+@query("q_streaming_rsi", oracle=ORACLES["q_rsi_cutler"])
 def q_streaming_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming RSI twin (N175b): the daily-cents state through the
     shared rsi_tail — the live momentum gauge (overbought/oversold
     bands re-evaluate per trigger from exact integer gain/loss sums);
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import rsi_tail
-
-    return rsi_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.rsi_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_jonckheere", oracle=_relext_oracle("q_jonckheere"))
+@query("q_streaming_jonckheere", oracle=ORACLES["q_jonckheere"])
 def q_streaming_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Jonckheere twin (N176b): the daily-cents state through
     the shared jonckheere_tail — the ordered week buckets grow as the
     stream runs, so the dose-response trend readout sharpens per
     trigger; hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import jonckheere_tail
-
-    return jonckheere_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.jonckheere_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_flesch", oracle=_llmdata_oracle("q_flesch_reading"))
+@query("q_streaming_flesch", oracle=ORACLES["q_flesch_reading"])
 def q_streaming_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Flesch twin (L112b): per-doc readability counts are pure
     projections, so the per-source counter table IS the streaming state
     (commutative sums, sources-bounded); drained counters flow through
     the shared flesch_tail — a live readability gate on a crawl;
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import flesch_counts, flesch_tail
-
-    g = flesch_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.flesch_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return flesch_tail(drained)
+    return llmdata.flesch_tail(drained)
 
 
-@query("q_streaming_oov", oracle=_llmdata_oracle("q_oov_rate"))
+@query("q_streaming_oov", oracle=ORACLES["q_oov_rate"])
 def q_streaming_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming OOV twin (L113b): the (source, token, c) count state —
     commutative, vocab x sources bounded — through the shared oov_tail,
     which re-derives the corpus top-1000 vocabulary per trigger, so the
     coverage audit tracks the vocabulary as it shifts mid-crawl;
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import oov_counts, oov_tail
-
-    st = oov_counts(_stream_docs(spark, sf_dir))
+    st = llmdata.oov_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(st, output_mode="complete")
-    return oov_tail(drained)
+    return llmdata.oov_tail(drained)
 
 
-@query("q_streaming_zipf", oracle=_llmdata_oracle("q_zipf_fit"))
+@query("q_streaming_zipf", oracle=ORACLES["q_zipf_fit"])
 def q_streaming_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Zipf twin (L115b, round 9): the (token, freq) vocabulary
+    """Streaming Zipf twin (L115b): the (token, freq) vocabulary
     state — commutative counts, vocab-bounded like the OOV/heaps twins —
     drained through the shared zipf_tail (decomposed-rank log-log
     regression): a LIVE rank-frequency health check on the crawl; a
     slope drifting away from -1 mid-ingest flags template or synthetic
     floods batches before the next batch audit would. Hash-matches the
     batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import zipf_counts, zipf_tail
-
-    vocab = zipf_counts(_stream_docs(spark, sf_dir))
+    vocab = llmdata.zipf_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(vocab, output_mode="complete")
-    return zipf_tail(drained)
+    return llmdata.zipf_tail(drained)
 
 
-@query("q_streaming_rrf", oracle=_llmdata_oracle("q_rrf_fusion"))
+@query("q_streaming_rrf", oracle=ORACLES["q_rrf_fusion"])
 def q_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming RRF twin (L117b, round 9): live hybrid retrieval — the
+    """Streaming RRF twin (L117b): live hybrid retrieval — the
     lexical BM25 leg's sufficient statistics ride ONE bounded streaming
     state (per-HIT-doc (len, tf_join, tf_scan, tf_vector) rows unioned
     with an is_corp=true corpus-totals sentinel row — the flag, not a
@@ -3059,10 +2217,7 @@ def q_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     term contributions in fixed alphabetical (join, scan, vector) order
     with absent terms contributing exactly 0.0 — bit-identical to the
     batch leg's w-sorted fold.  Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import rrf_fusion_tail, rrf_sem_leg
-    from pyspark.sql.window import Window
-
-    sdf = _stream_docs(spark, sf_dir)
+    sdf = stream_table(spark, sf_dir, "documents")
     tf_expr = {
         w: F.size(F.expr(f"filter(split(text, ' '), w -> w = '{w}')")).cast("long")
         for w in ("join", "scan", "vector")
@@ -3141,109 +2296,81 @@ def q_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("lex_rank"),
     )
     emb = load_table(spark, "embeddings", sf_dir)
-    return rrf_fusion_tail(lex, rrf_sem_leg(emb))
+    return llmdata.rrf_fusion_tail(lex, llmdata.rrf_sem_leg(emb))
 
 
-@query("q_streaming_macd", oracle=_relext_oracle("q_macd"))
+@query("q_streaming_macd", oracle=ORACLES["q_macd"])
 def q_streaming_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MACD twin (N180b, round 10): the daily-cents state
+    """Streaming MACD twin (N180b): the daily-cents state
     through the shared macd_tail — the live momentum-crossover gauge
     (today's bar re-smooths all three EMAs as its revenue accumulates);
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import macd_tail
-
-    return macd_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.macd_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_anderson", oracle=_relext_oracle("q_anderson_darling"))
+@query("q_streaming_anderson", oracle=ORACLES["q_anderson_darling"])
 def q_streaming_anderson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Anderson-Darling twin (N181b, round 10): the daily-cents
+    """Streaming Anderson-Darling twin (N181b): the daily-cents
     state through the shared anderson_tail — live normality monitoring
     of the metric the z-score/XmR alerting families assume Gaussian;
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import anderson_tail
-
-    return anderson_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.anderson_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_cvm", oracle=_llmdata_oracle("q_cvm_drift"))
+@query("q_streaming_cvm", oracle=ORACLES["q_cvm_drift"])
 def q_streaming_cvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Cramér-von Mises twin (L118b, round 10): the same
+    """Streaming Cramér-von Mises twin (L118b): the same
     (source, score-bin) streaming state as q_streaming_ks — bounded at
     sources × 10k cells forever — drained through the shared cvm_report
     tail: the integrated-discrepancy drift monitor beside KS's max-gap,
     live on a document stream. Hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import cvm_report, ks_score_bin
-
-    cnt = (
-        _stream_docs(spark, sf_dir)
-        .select("source", ks_score_bin().alias("b"))
-        .groupBy("source", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    drained, _ = run_stream_to_memory(cnt, output_mode="complete")
-    return cvm_report(drained)
+    return llmdata.cvm_report(_streaming_score_bins(spark, sf_dir))
 
 
-@query("q_streaming_blocklist", oracle=_llmdata_oracle("q_blocklist_scrub"))
+@query("q_streaming_blocklist", oracle=ORACLES["q_blocklist_scrub"])
 def q_streaming_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming blocklist twin (L119b, round 10): per-doc hit counts are
+    """Streaming blocklist twin (L119b): per-doc hit counts are
     pure functions, so the per-source counter table IS the streaming
     state (commutative sums, sources-bounded); drained counters flow
     through the shared blocklist_tail — the policy kill switch fires as
     the crawl ingests, not at the next batch audit. Hash-matches the
     batch oracle."""
-    from simple_stream_processor_spark.queries_llmdata import blocklist_counts, blocklist_tail
-
-    g = blocklist_counts(_stream_docs(spark, sf_dir))
+    g = llmdata.blocklist_counts(stream_table(spark, sf_dir, "documents"))
     drained, _ = run_stream_to_memory(g, output_mode="complete")
-    return blocklist_tail(drained)
+    return llmdata.blocklist_tail(drained)
 
 
-@query("q_streaming_theta", oracle=_relext_oracle("q_theta_forecast"))
+@query("q_streaming_theta", oracle=ORACLES["q_theta_forecast"])
 def q_streaming_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Theta twin (N182b, round 10): the daily-cents state
+    """Streaming Theta twin (N182b): the daily-cents state
     through the shared theta_tail — the live trend+SES combination
     forecast re-fits as today's bar accumulates; hash-matches the batch
     oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import theta_tail
-
-    return theta_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.theta_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_mmr", oracle=_llmdata_oracle("q_mmr_rerank"))
+@query("q_streaming_mmr", oracle=ORACLES["q_mmr_rerank"])
 def q_streaming_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MMR twin (L120b, round 10): relevance-vs-probe is a pure
+    """Streaming MMR twin (L120b): relevance-vs-probe is a pure
     per-vector function, so the streaming state is the per-vector best
     score (idempotent max, vector-count-bounded); the drained scores cut
     the same top-10 candidate set, vectors rejoin from the static store
     by id (the online-serving pattern: the stream carries scores, the
     vector store carries payloads), and the shared mmr_greedy tail picks
     the diversified 5. Hash-matches the batch oracle."""
-    import os as _os
-
-    from simple_stream_processor_spark.operators.dedup import cosine
-    from simple_stream_processor_spark.queries_llmdata import mmr_greedy
-    from simple_stream_processor_spark.tables import load_table
-
     emb = load_table(spark, "embeddings", sf_dir)
     e_static = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     probe = e_static.where(F.col("vec_id") == 0).select(F.col("v").alias("pv"))
 
-    raw_schema = stream_schema(spark, sf_dir, "embeddings")
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = stream_table(spark, sf_dir, "embeddings")
     scored = (
         sdf.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(probe))
         .select(
             "vec_id", "label",
-            cosine(F.col("embedding").cast("array<double>"), F.col("pv")).alias("rel"),
+            dedup.cosine(F.col("embedding").cast("array<double>"), F.col("pv")).alias("rel"),
         )
         .groupBy("vec_id", "label")
         .agg(F.max("rel").alias("rel"))
@@ -3253,38 +2380,32 @@ def q_streaming_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = top.join(
         e_static.withColumnRenamed("vec_id", "s_vid"), F.col("vec_id") == F.col("s_vid")
     ).select("vec_id", "label", "v", "rel")
-    return mmr_greedy(cand)
+    return llmdata.mmr_greedy(cand)
 
 
-@query("q_streaming_grubbs", oracle=_relext_oracle("q_grubbs_test"))
+@query("q_streaming_grubbs", oracle=ORACLES["q_grubbs_test"])
 def q_streaming_grubbs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Grubbs twin (N184b, round 10): the daily-cents state
+    """Streaming Grubbs twin (N184b): the daily-cents state
     through the shared grubbs_tail — the live worst-day alarm (is
     today's most extreme revenue day statistically an outlier, at 5%?)
     beside the XmR/z-score monitors; state bounded at types × days
     forever; hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import grubbs_tail
-
-    return grubbs_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.grubbs_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_pacf", oracle=_relext_oracle("q_pacf"))
+@query("q_streaming_pacf", oracle=ORACLES["q_pacf"])
 def q_streaming_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PACF twin (N185b, round 10): the daily-cents state
+    """Streaming PACF twin (N185b): the daily-cents state
     through the shared pacf_tail — live AR-order identification (does
     the forecasting family need one lag or three?) refreshing as each
     day's revenue accumulates; hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import pacf_tail
-
-    return pacf_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.pacf_tail(_streaming_daily_by_type(spark, sf_dir))
 
 
-@query("q_streaming_chow", oracle=_relext_oracle("q_chow_test"))
+@query("q_streaming_chow", oracle=ORACLES["q_chow_test"])
 def q_streaming_chow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Chow twin (N186b, round 10): the daily-cents state
+    """Streaming Chow twin (N186b): the daily-cents state
     through the shared chow_tail — a live did-the-regime-change monitor
     (one trend or two?) whose mid-range breakpoint moves with the data;
     hash-matches the batch oracle."""
-    from simple_stream_processor_spark.queries_relational_ext import chow_tail
-
-    return chow_tail(_streaming_daily_by_type(spark, sf_dir))
+    return relext.chow_tail(_streaming_daily_by_type(spark, sf_dir))

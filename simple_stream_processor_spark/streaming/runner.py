@@ -17,13 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 TMP_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
 
-# Streaming audit capture (r9 judge task #5): when SPARK_GRAFT_STREAM_AUDIT=1,
-# every stream this module (or a foreachBatch query) runs appends one record
-# here — the final micro-batch physical plan plus all progress dicts — so
-# tools/stream_audit.py can assert the Python-boundary and state-bound
-# disciplines over the LIVE micro-batch plans, which tools/plan_audit.py
-# (batch-only) structurally skips. Off by default: zero overhead on the
-# driver/bench paths.
+# Streaming audit capture: when SPARK_GRAFT_STREAM_AUDIT=1, every stream
+# this module drains appends one record here — the final micro-batch
+# physical plan plus all progress dicts — so tools/stream_audit.py can
+# assert the Python-boundary and state-bound disciplines over the LIVE
+# micro-batch plans, which tools/plan_audit.py (batch-only) structurally
+# skips. Off by default: zero overhead on the driver/bench paths.
 AUDIT_LOG: list[dict] = []
 
 
@@ -59,13 +58,10 @@ def _tmpdir(kind: str) -> str:
     return path
 
 
-# r11 (guide §1.2 "don't compute things you throw away"): the file streaming
-# source needs an explicit schema, which every twin probed with a fresh
-# spark.read.parquet(...).schema — a driver-side footer read (~0.1 s here)
-# repeated 43 times across the twins and once per drain in every harness
-# sweep. The schema is METADATA, invalidated by file mtime+size — caching it
-# is not result caching (no query output is memoized; a changed fixture
-# busts the key). One probe per (path, mtime, size) per process.
+# The file streaming source needs an explicit schema, and probing it is a
+# driver-side footer read (~0.1 s). The schema is metadata keyed on file
+# mtime+size, so caching it caches no query output and a changed fixture
+# busts the key: one probe per (path, mtime, size) per process.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -82,24 +78,69 @@ def stream_schema(spark: SparkSession, sf_dir: str, table: str):
     return _SCHEMA_CACHE[key]
 
 
+def _table_reader(spark: SparkSession, sf_dir: str, table: str):
+    # the file streaming source requires a directory; a glob narrows it to
+    # the one table file
+    return spark.readStream.schema(stream_schema(spark, sf_dir, table)).option(
+        "pathGlobFilter", f"{table}.parquet"
+    )
+
+
+def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """Unbounded view of one testdata table via the file streaming source,
+    with the columns exactly as stored (timestamps stay TIMESTAMP_NTZ)."""
+    return _table_reader(spark, sf_dir, table).parquet(sf_dir)
+
+
 def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """Unbounded view of the events table via the file streaming source.
-    ``max_files_per_trigger`` is the admission-control knob — the Spark
-    form of the reference's bounded queue capacity (ADR-0004: block, never
-    drop: unread files simply wait for the next trigger)."""
+    """Unbounded view of the events table via the file streaming source,
+    with ``ts`` normalised to plain TIMESTAMP exactly as the batch path
+    does (tables._normalize_timestamps). ``max_files_per_trigger`` is the
+    admission-control knob — the Spark form of the reference's bounded
+    queue capacity (ADR-0004: block, never drop: unread files simply wait
+    for the next trigger)."""
     from simple_stream_processor_spark.tables import _normalize_timestamps
 
-    # the parquet file stores ts with isAdjustedToUTC=false → TIMESTAMP_NTZ
-    # (or long under legacy nanosAsLong); reconstruct the plain-TIMESTAMP
-    # column identically on the streaming path (see tables._normalize_timestamps)
-    raw_schema = stream_schema(spark, sf_dir, "events")
-    # the file streaming source requires a directory; narrow to the events
-    # file with a glob filter
-    reader = spark.readStream.schema(raw_schema).option("pathGlobFilter", "events.parquet")
+    reader = _table_reader(spark, sf_dir, "events")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(sf_dir)
-    return _normalize_timestamps(spark, df)
+    return _normalize_timestamps(spark, reader.parquet(sf_dir))
+
+
+def _drain(spark: SparkSession, writer, checkpoint: str, timeout_s: float) -> list[dict]:
+    """Start ``writer`` with Trigger.AvailableNow, wait for it to drain,
+    and return its progress dicts. A drain still running after
+    ``timeout_s`` is stopped and raises ``TimeoutError``: its sink holds a
+    partial answer.
+
+    State-store partition count is frozen to spark.sql.shuffle.partitions
+    at first checkpoint, and AQE never applies to streaming, so under a
+    default-config session every micro-batch would pay 200 state tasks.
+    The count is sized to the state, not the cores: every drained twin
+    keeps O(types x days) ≈ 150-200 state rows, and at ~100 rows per store
+    that is 2 stores; each extra store pays fixed open/commit checkpoint
+    I/O per micro-batch for a handful of rows (4-twin alternating A/B at
+    sf0.1: 8 -> 2 stores is −8% per drain). Keyed state at production
+    volume sizes the same rule through SPARK_GRAFT_STREAM_STATE_PARTITIONS.
+    A foreachBatch drain has no state store; there the value sizes each
+    batch's shuffles over a few thousand rows, where 2 partitions measured
+    no slower than 4. The caller's value is restored once the drain ends,
+    so batch queries are untouched."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    state_parts = int(
+        os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", min(spark.sparkContext.defaultParallelism, 2))
+    )
+    spark.conf.set("spark.sql.shuffle.partitions", state_parts)
+    try:
+        query = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
+        if not query.awaitTermination(timeout_s):
+            query.stop()
+            raise TimeoutError(f"stream {query.name or query.id} did not drain within {timeout_s} s")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    progress = [p.asDict() if hasattr(p, "asDict") else p for p in query.recentProgress]
+    audit_record(query, progress)
+    return progress
 
 
 def run_stream_to_memory(
@@ -110,50 +151,10 @@ def run_stream_to_memory(
     """Run a streaming DataFrame to completion (AvailableNow) into a memory
     sink; return (result DataFrame, progress dicts). The progress list is
     the metrics surface — ``stateOperators[].numRowsDroppedByWatermark``
-    is the reference's ``ssp_late_event_dropped_total``."""
+    is the reference's ``ssp_late_event_dropped_total``. Raises
+    ``TimeoutError`` if the drain does not finish within ``timeout_s``."""
     spark = sdf.sparkSession
-    # State-store partition count is frozen to spark.sql.shuffle.partitions at
-    # first checkpoint, and AQE never applies to streaming — under a
-    # default-config session every micro-batch would pay 200 state tasks.
-    # r10: size it to the STATE, not the core count — every stateful twin
-    # here keeps bounded state (types x days, sources x bins: hundreds of
-    # rows), and each state partition pays fixed open/commit checkpoint
-    # overhead per micro-batch; 32 stores for 150 state rows measured 1.1 s
-    # per drain vs 0.63 s with 8 (sf0.1, warm). min() keeps lower-core
-    # driver runs identical; a real deployment with large keyed state
-    # raises SPARK_GRAFT_STREAM_STATE_PARTITIONS instead (state volume /
-    # target partition size), which is the same sizing rule expressed as a
-    # knob. Value RESTORED after start so batch queries are untouched.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    # r11: the default moved 8 -> 2 and is now DERIVED from the documented
-    # state bound rather than clamped to it: every drained twin here keeps
-    # O(types x days) ≈ 150-200 state rows, and the sizing rule is
-    # ceil(state_rows / target_rows_per_store) with ~100 rows per store —
-    # 2 stores. Measured (4-twin alternating A/B, sf0.1): 8 -> 2 is −8%
-    # per drain; each extra store pays fixed open/commit checkpoint I/O
-    # per micro-batch for a handful of rows. Production keyed state sizes
-    # the same rule through SPARK_GRAFT_STREAM_STATE_PARTITIONS (state
-    # volume / target partition size), unchanged.
-    state_parts = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS",
-            str(min(spark.sparkContext.defaultParallelism, 2)),
-        )
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     name = "mem_" + uuid.uuid4().hex[:12]
-    try:
-        query = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", _tmpdir("chk"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(timeout_s)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-    progress = [p.asDict() if hasattr(p, "asDict") else p for p in query.recentProgress]
-    audit_record(query, progress)
+    writer = sdf.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    progress = _drain(spark, writer, _tmpdir("chk"), timeout_s)
     return spark.table(name), progress

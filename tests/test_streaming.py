@@ -328,6 +328,20 @@ def test_run_stream_to_memory_restores_shuffle_partitions(spark, sf_dir):
         spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
+def test_run_stream_to_memory_timeout_raises_and_stops_query(spark, sf_dir):
+    """A drain still running at its timeout must fail, not hand back the
+    partial memory sink: the query is stopped, the caller's shuffle
+    partitions are restored, and TimeoutError names the query."""
+    import pytest
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    sdf = stream_events(spark, sf_dir, max_files_per_trigger=1).select("event_id")
+    with pytest.raises(TimeoutError, match="mem_"):
+        run_stream_to_memory(sdf, timeout_s=0.001)
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
+
+
 def test_boundary_queue_depth_bounded_by_admission(spark):
     """X7 gauge parity: under micro-batch admission control the trigger
     batch IS the boundary queue, so ssp_boundary_queue_depth_max must never
